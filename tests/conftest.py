@@ -112,7 +112,7 @@ def pytest_collection_finish(session):
     for hook in hooks:
         # each sweep runs on its own newSession() CLONE (shared
         # SparkContext + CacheManager, PRIVATE SQLConf and temp-view
-        # catalog): registry builders _tune() the session to the
+        # catalog): registry builders tune_for_oracle() the session to the
         # engine's 32 shuffle partitions, which on the shared session
         # flipped the foreground tests' conf (8) mid-suite for every
         # concurrent test (r13 advisor). Cache state is still global —

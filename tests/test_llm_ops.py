@@ -459,9 +459,10 @@ def test_oversized_buckets_reports_dropped(spark):
         [(0, 7, i) for i in range(5)] + [(0, 9, 100), (0, 9, 101)],
         ["band_idx", "band_hash", "doc_id"],
     )
-    dropped = dd.oversized_buckets(band, "doc_id", max_bucket_size=3).collect()
+    census = dd._counted_census_plan(band, "doc_id", max_bucket_size=3)
+    dropped = dd._census_report(census).collect()
     assert len(dropped) == 1 and dropped[0].bucket_n == 5
-    pairs = dd.candidate_pairs(band, "doc_id", max_bucket_size=3).collect()
+    pairs = dd.candidate_pairs(band, "doc_id", census).collect()
     assert {(r.id1, r.id2) for r in pairs} == {(100, 101)}
 
 
@@ -472,7 +473,9 @@ def test_oversized_bucket_star_pairs_linear_recovery(spark):
         [(0, 7, i) for i in range(5)] + [(0, 9, 100), (0, 9, 101)],
         ["band_idx", "band_hash", "doc_id"],
     )
-    stars = dd.oversized_bucket_star_pairs(band, "doc_id", max_bucket_size=3)
+    stars = dd._census_star_pairs(
+        band, "doc_id", dd._counted_census_plan(band, "doc_id", 3)
+    )
     assert {(r.id1, r.id2) for r in stars.collect()} == {
         (0, 1), (0, 2), (0, 3), (0, 4)
     }
@@ -1364,6 +1367,49 @@ def test_joint_dedup_bridges_modalities(spark):
     assert out[3] == (3, True)
 
 
+def test_joint_dedup_builders_run_under_caller_job_group(spark, monkeypatch):
+    """joint_near_dup_survivors builds its text and SRP candidate sides
+    on pool threads. Under pinned-thread mode a plain pool thread
+    starts with no JVM local properties, so each side's eager census
+    job must still land in the CALLER's job group — otherwise caller
+    cancellation and job accounting miss the builders' work."""
+    sc = spark.sparkContext
+    group = "joint-dedup-builders"
+    census_jobs = []
+    real_census = dd._counted_census_plan
+
+    def recording_census(band_df, *args, **kwargs):
+        if band_df.sparkSession is not spark:  # a concurrent sweep's clone
+            return real_census(band_df, *args, **kwargs)
+        tracker = sc.statusTracker()
+        before = set(tracker.getJobIdsForGroup(group))
+        out = real_census(band_df, *args, **kwargs)
+        census_jobs.append(set(tracker.getJobIdsForGroup(group)) - before)
+        return out
+
+    monkeypatch.setattr(dd, "_counted_census_plan", recording_census)
+    rows = [
+        (i, f"doc {i} about topic {i % 3} with shared words here",
+         [1.0, float(i % 2), 0.5, -1.0])
+        for i in range(6)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, embedding array<double>"
+    )
+    sc.setJobGroup(group, "joint dedup builders")
+    try:
+        dd.joint_near_dup_survivors(
+            df, "doc_id", "text", "embedding", dim=4,
+            shingle_n=2, num_hashes=8, bands=4, num_bits=2,
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # one census per builder (text + SRP), each ran >= 1 job in group
+    assert len(census_jobs) == 2
+    assert all(census_jobs), census_jobs
+
+
 def test_repeated_substring_spans_planted(spark):
     """r7 verdict ask #6 (Lee et al. ExactSubstr): planted repeated
     passages — cross-doc, within-doc, and an untouched unique doc.
@@ -2194,20 +2240,20 @@ def mega_band(spark):
 
 def test_mega_bucket_cap_sites_have_no_unbounded_collect_list(mega_band):
     """The oversized/star/capped-ref plans must not contain collect_list
-    at all; candidate_pairs may collect only AFTER the two-phase
-    oversized-key anti-join bounds the bucket (r10: count-first hash
-    agg + LeftAnti, broadcast left to AQE — no window sort on the
-    common path)."""
-    over_plan = dd.oversized_buckets(
-        mega_band, "doc_id", max_bucket_size=50
+    at all; candidate_pairs may collect only AFTER the census anti-join
+    bounds the bucket (count+min hash census + LeftAnti — no window
+    sort on the common path)."""
+    census = dd._counted_census_plan(mega_band, "doc_id", 50)
+    over_plan = dd._census_report(
+        census
     )._jdf.queryExecution().optimizedPlan().toString()
-    star_plan = dd.oversized_bucket_star_pairs(
-        mega_band, "doc_id", max_bucket_size=50
+    star_plan = dd._census_star_pairs(
+        mega_band, "doc_id", census
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" not in over_plan
     assert "collect_list" not in star_plan
 
-    cand = dd.candidate_pairs(mega_band, "doc_id", max_bucket_size=50)
+    cand = dd.candidate_pairs(mega_band, "doc_id", census)
     cand_plan = cand._jdf.queryExecution().optimizedPlan().toString()
     # the collect_list survives, but only downstream of the bounding
     # anti-join against the oversized-key set; the r9 window-count
@@ -2222,7 +2268,8 @@ def test_capped_bucket_members_two_phase_plan_and_results(mega_band):
     window on their path (anti-join, strategy left to AQE), oversized buckets keep
     the cap smallest ids via a window confined to the rare semi-joined
     branch."""
-    capped = dd.capped_bucket_members(mega_band, "doc_id", 50)
+    census = dd._counted_census_plan(mega_band, "doc_id", 50)
+    capped = dd.capped_bucket_members(mega_band, "doc_id", 50, census)
     plan = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftAnti" in plan and "LeftSemi" in plan
     assert "collect_list" not in plan
@@ -2236,44 +2283,45 @@ def test_capped_bucket_members_two_phase_plan_and_results(mega_band):
 
 
 def test_counted_cap_strategy_branches(spark, mega_band):
-    """r11 counted first phase: ZERO oversized keys short-circuits to
-    the band frame itself (no joins in the plan at all); a small
-    oversized key set rides an explicit broadcast (the band side never
-    shuffles for the anti-join)."""
+    """The census ladder: ZERO oversized buckets short-circuits to the
+    band frame itself (no joins in the plan at all); a small census
+    rides an explicit broadcast (the band side never shuffles for the
+    anti-join)."""
     clean = spark.createDataFrame(
         [(0, 5, 1), (0, 5, 2), (0, 9, 3)],
         ["band_idx", "band_hash", "doc_id"],
     )
-    out = dd.capped_bucket_members(clean, "doc_id", 50)
+    out = dd.capped_bucket_members(
+        clean, "doc_id", 50, dd._counted_census_plan(clean, "doc_id", 50)
+    )
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan  # passthrough, zero extra work
     assert out.count() == 3
 
-    capped = dd.capped_bucket_members(mega_band, "doc_id", 50)
+    census = dd._counted_census_plan(mega_band, "doc_id", 50)
+    capped = dd.capped_bucket_members(mega_band, "doc_id", 50, census)
     plan = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "strategy=broadcast" in plan  # counted-small -> hinted
-    cand = dd.candidate_pairs(mega_band, "doc_id", max_bucket_size=50)
+    cand = dd.candidate_pairs(mega_band, "doc_id", census)
     assert "strategy=broadcast" in (
         cand._jdf.queryExecution().optimizedPlan().toString()
     )
 
 
 def test_mega_bucket_results_unchanged_and_fast(mega_band):
-    cap = 50
+    census = dd._counted_census_plan(mega_band, "doc_id", 50)
     # candidate_pairs: mega-bucket dropped entirely, small bucket kept
     pairs = {(r.id1, r.id2) for r in dd.candidate_pairs(
-        mega_band, "doc_id", max_bucket_size=cap
+        mega_band, "doc_id", census
     ).collect()}
     assert pairs == {(10**6, 10**6 + 1), (10**6, 10**6 + 2), (10**6 + 1, 10**6 + 2)}
     # oversized: one row, count + smallest-id anchor, NO member array
-    over = dd.oversized_buckets(mega_band, "doc_id", max_bucket_size=cap).collect()
+    over = dd._census_report(census).collect()
     assert len(over) == 1
     assert (over[0].bucket_n, over[0].anchor_id) == (5000, 0)
     assert "ids" not in over[0].asDict()
     # star recovery: anchor 0 paired with every other member — linear
-    stars = dd.oversized_bucket_star_pairs(
-        mega_band, "doc_id", max_bucket_size=cap
-    )
+    stars = dd._census_star_pairs(mega_band, "doc_id", census)
     assert stars.count() == 4999
     assert stars.agg(F.min("id1"), F.max("id1")).collect()[0][:] == (0, 0)
 
@@ -2310,6 +2358,94 @@ def test_cross_ref_index_frames_cap_and_oversized(spark):
         max_bucket_size=8,
     )
     assert direct.count() == idx.count()
+
+
+def _direct_over_cap(band, keys, id_col, cap):
+    """The over-cap buckets of a band frame by a direct count+min
+    aggregate, as (keys…, bucket_n, anchor_id) tuples."""
+    return {tuple(r) for r in (
+        band.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("a"))
+        .filter(F.col("n") > cap)
+        .collect()
+    )}
+
+
+def test_cross_and_index_oversized_reports_are_census_projections(spark):
+    """Every cross / reference-index cap site reports its oversized
+    buckets as a projection of its ONE bucket census: the report's
+    optimized plan holds no Aggregate (the small census was collected
+    to a LocalRelation), and its rows equal a direct count+min
+    aggregate of the site's band frame."""
+    cap = 8
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    ref_txt = spark.createDataFrame(
+        [(i, text) for i in range(12)]
+        + [(99, "totally different words here about nothing shared")],
+        ["doc_id", "text"],
+    )
+    new_txt = spark.createDataFrame([(1000, text)], ["doc_id", "text"])
+    v = [1.0, 2.0, 3.0, 4.0]
+    ref_vec = spark.createDataFrame(
+        [(100 + i, v) for i in range(12)] + [(200, [0.0, 0.0, 0.0, 1.0])],
+        ["vec_id", "embedding"],
+    )
+    new_vec = spark.createDataFrame([(1, v)], ["vec_id", "embedding"])
+
+    text_bands = dd.lsh_bands(
+        dd.minhash_signatures(
+            dd.shingles(ref_txt, "doc_id", "text", 3), "doc_id", 16
+        ), "doc_id", 4, 4,
+    )
+    text_over = _direct_over_cap(
+        text_bands, ("band_idx", "band_hash"), "doc_id", cap
+    )
+    srp_over = _direct_over_cap(
+        sim._srp_sig_frame(ref_vec, "vec_id", "embedding", 4, 6, 42),
+        ("bucket",), "__id", cap,
+    )
+    multi_over = _direct_over_cap(
+        sim._srp_multi_sig_base(
+            ref_vec, "vec_id", "embedding", 4, 6, 2, 42
+        ).select("__id", F.posexplode("__buckets").alias("band_idx", "bucket")),
+        ("band_idx", "bucket"), "__id", cap,
+    )
+    # the identical cluster overflows in every band / table
+    assert len(text_over) == 4 and len(srp_over) == 1 and len(multi_over) == 2
+
+    cross_text = dd.cross_near_dup_frames(
+        new_txt, ref_txt, "doc_id", "text", num_hashes=16, bands=4,
+        max_bucket_size=cap,
+    )
+    sites = {
+        "cross_near_dup_frames": (cross_text, text_over),
+        "cross_ref_index_frames": (dd.cross_ref_index_frames(
+            ref_txt, "doc_id", "text", num_hashes=16, bands=4,
+            max_bucket_size=cap,
+        ), text_over),
+        "srp_ref_index_frames": (sim.srp_ref_index_frames(
+            ref_vec, "vec_id", "embedding", dim=4, num_bits=6,
+            max_bucket_size=cap,
+        ), srp_over),
+        "cross_srp_near_dup_frames": (sim.cross_srp_near_dup_frames(
+            new_vec, ref_vec, "vec_id", "embedding", threshold=0.9, dim=4,
+            num_bits=6, max_bucket_size=cap,
+        ), srp_over),
+        "srp_multi_table_ref_index_frames": (
+            sim.srp_multi_table_ref_index_frames(
+                ref_vec, "vec_id", "embedding", dim=4, num_bits=6,
+                num_tables=2, max_bucket_size=cap,
+            ), multi_over),
+    }
+    try:
+        for name, (frames, expected) in sites.items():
+            over = frames["oversized"]
+            plan = over._jdf.queryExecution().optimizedPlan().toString()
+            assert "Aggregate" not in plan, name
+            assert {tuple(r) for r in over.collect()} == expected, name
+    finally:
+        for f in cross_text["cached"]:
+            f.unpersist()
 
 
 def test_srp_ref_index_frames_cap_and_oversized(spark):
@@ -3586,42 +3722,27 @@ def test_hard_negative_recall_theorems(spark):
     assert out[(2, 1)].recall >= out[(2, 0)].recall
 
 
-def test_census_plan_matches_legacy_aggregates(mega_band):
-    """r12 census consolidation: the single (keys, __n, __anchor)
-    census must be value-equivalent to the three r11 aggregates it
-    replaced — the oversized_buckets report, the
-    oversized_bucket_star_pairs seeds, and the oversized-key set — on
-    a planted mega-bucket corpus, including the collected-LocalRelation
-    fast path (census here is 1 row, far under COLLECT_KEY_LIMIT)."""
-    n_over, census = dd._counted_census_plan(mega_band, "doc_id", 50)
-    assert n_over == 1
+def test_census_products_pin_cap_values(mega_band):
+    """Every cap product of one (keys, __n, __anchor) census on a
+    planted mega-bucket corpus, through the collected-LocalRelation
+    fast path (the census here is 1 row, far under COLLECT_KEY_LIMIT):
+    the report, the anchor-star seeds, and the capped candidates."""
+    census = dd._counted_census_plan(mega_band, "doc_id", 50)
+    assert census.n_over == 1
 
-    # report == legacy oversized_buckets (rows and columns)
     report = {tuple(r) for r in dd._census_report(census).collect()}
-    legacy = {tuple(r) for r in
-              dd.oversized_buckets(mega_band, "doc_id", 50).collect()}
-    assert report == legacy == {(0, 7, 5000, 0)}
+    assert report == {(0, 7, 5000, 0)}
 
-    # star pairs == legacy anchor-star recovery
     star = {(r.id1, r.id2) for r in
             dd._census_star_pairs(mega_band, "doc_id", census).collect()}
-    legacy_star = {(r.id1, r.id2) for r in
-                   dd.oversized_bucket_star_pairs(
-                       mega_band, "doc_id", 50).collect()}
-    assert star == legacy_star
     assert star == {(0, i) for i in range(1, 5000)}
 
-    # candidate_pairs fed the census == candidate_pairs re-deriving
-    fed = {(r.id1, r.id2) for r in
-           dd.candidate_pairs(mega_band, "doc_id", 50,
-                              _census=(n_over, census)).collect()}
-    rederived = {(r.id1, r.id2) for r in
-                 dd.candidate_pairs(mega_band, "doc_id", 50).collect()}
-    assert fed == rederived
     # only the 3-member bucket expands: mega bucket dropped, pairs from
     # {1e6, 1e6+1, 1e6+2}
-    assert fed == {(10**6, 10**6 + 1), (10**6, 10**6 + 2),
-                   (10**6 + 1, 10**6 + 2)}
+    cand = {(r.id1, r.id2) for r in
+            dd.candidate_pairs(mega_band, "doc_id", census).collect()}
+    assert cand == {(10**6, 10**6 + 1), (10**6, 10**6 + 2),
+                    (10**6 + 1, 10**6 + 2)}
 
 
 def test_census_empty_case_is_local_and_lazy_free(spark):
@@ -3632,15 +3753,15 @@ def test_census_empty_case_is_local_and_lazy_free(spark):
     anti-join entirely."""
     rows = [(0, h, i) for h in (1, 2, 3) for i in range(3)]
     band = spark.createDataFrame(rows, ["band_idx", "band_hash", "doc_id"])
-    n_over, census = dd._counted_census_plan(band, "doc_id", 50)
-    assert n_over == 0
-    plan = census._jdf.queryExecution().optimizedPlan().toString()
+    census = dd._counted_census_plan(band, "doc_id", 50)
+    assert census.n_over == 0
+    plan = census.frame._jdf.queryExecution().optimizedPlan().toString()
     # empty-python-built frame (LocalRelation or empty LogicalRDD) —
     # the point is that NO aggregate subtree survives to re-run
     assert ("LocalRelation" in plan or "LogicalRDD" in plan)
     assert "Aggregate" not in plan
-    assert census.count() == 0
-    cand = dd.candidate_pairs(band, "doc_id", 50, _census=(n_over, census))
+    assert census.frame.count() == 0
+    cand = dd.candidate_pairs(band, "doc_id", census)
     assert "Join" not in cand._jdf.queryExecution().optimizedPlan().toString()
 
 

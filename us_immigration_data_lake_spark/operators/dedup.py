@@ -24,6 +24,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -232,71 +234,129 @@ def lsh_bands(
     return out.select(id_col, "band.band_idx", "band.band_hash")
 
 
-def oversized_buckets(
-    band_df: DataFrame, id_col: str, max_bucket_size: int = 1000
-) -> DataFrame:
-    """The band buckets candidate_pairs DROPS (size > cap): one row per
-    mega-bucket with its size and anchor (smallest) member id. Run this
-    alongside candidate_pairs so the truncation is observable — a >cap
-    bucket is usually a boilerplate cluster worth handling as a group
-    (e.g. keep one member) rather than pairwise.
-
-    count+min aggregates only — NO member-id list. The r8 form
-    collected the full id array per bucket, which materialized an
-    unbounded aggregation-buffer row (~8 GB for a 10⁹-member bucket)
-    on exactly the degenerate input this guard exists for; count and
-    min are map-side-combinable constants per key."""
-    return (
-        band_df.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min(id_col).alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
+# Over-cap bucket censuses up to this many rows ride an explicit
+# broadcast (~2M (int, long) keys ≈ the session's 64 MB
+# autoBroadcastJoinThreshold in unsafe-row bytes); beyond it the cap
+# joins fall back to unhinted (AQE-planned) joins rather than force a
+# multi-GB broadcast.
+BROADCAST_KEY_LIMIT = 2_000_000
+# ...and censuses up to this many rows are collected to the driver and
+# re-shipped as a literal LocalRelation — the rows cross the driver
+# either way under a broadcast, and a local frame saves re-running the
+# census aggregation in each consumer join.
+COLLECT_KEY_LIMIT = 100_000
 
 
-def oversized_bucket_star_pairs(
-    band_df: DataFrame, id_col: str, max_bucket_size: int = 1000
-) -> DataFrame:
-    """Linear-cost candidate recovery for the buckets candidate_pairs
-    drops: pair every member of a mega-bucket with the bucket's
-    smallest id (the anchor) instead of all-pairs. O(bucket) rows per
-    bucket, not O(bucket²), so a million-doc boilerplate cluster costs
-    a million candidate rows on one key — shuffleable, not explosive.
-    Downstream Jaccard verification still applies, so false-positive
-    bucket members are discarded; true boilerplate clusters end up
-    connected through the anchor and collapse to one survivor in
-    connected-components dedup.
+class BucketCensus(NamedTuple):
+    """``_counted_census_plan``'s result: the number of over-cap
+    buckets and the census frame ``(key_cols…, __n, __anchor)``."""
 
-    Bounded state: anchors come from count+min aggregates (constant
-    per-key buffer), then one equi-join back to the band frame fans
-    each mega-bucket member out against its anchor — no collect_list,
-    so a 10⁹-member bucket streams through the join instead of
-    buffering as one array row."""
-    anchors = (
-        band_df.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("id1"))
+    n_over: int
+    frame: DataFrame
+
+
+def _counted_census_plan(
+    band_df: DataFrame, id_col: str, max_bucket_size: int,
+    key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
+) -> BucketCensus:
+    """THE over-cap bucket census — the only place a band frame is
+    grouped by its bucket key to find the buckets over
+    ``max_bucket_size``: ``(key_cols…, __n, __anchor)``, count +
+    min(id) per bucket, filtered to > cap. Every cap product of a cap
+    site derives from this one census:
+
+    - ``n_over`` picks the join strategy (0: consumers skip the cap
+      joins entirely, the band frame passes through untouched);
+    - its key columns are the anti/semi-join key set
+      (candidate_pairs, capped_bucket_members);
+    - ``__anchor`` seeds the anchor-star recovery pairs
+      (_census_star_pairs);
+    - renamed to (bucket_n, anchor_id) it IS the oversized report
+      (_census_report), and ``n_over`` its row count.
+
+    The strategy ladder, decided by ONE bounded limit-collect that
+    also fetches the rows:
+
+    - no rows (the common clean-corpus case): an empty LocalRelation
+      built in Python — the collect already proved the census empty,
+      so there is nothing to re-run;
+    - ≤ COLLECT_KEY_LIMIT rows: the collected rows as a broadcast
+      LocalRelation — consumer joins never re-run the aggregation
+      (exchange reuse between an action and later joins is not
+      guaranteed);
+    - ≤ BROADCAST_KEY_LIMIT (counted by a second action, only on this
+      rare branch): broadcast-hinted — the big band side never
+      shuffles for the cap joins (an unhinted plan pays a full
+      shuffle WRITE of the band frame even when AQE later converts
+      the join);
+    - beyond (pathological high-duplication corpus): unhinted — AQE
+      plans the joins, nothing is force-broadcast into an OOM.
+
+    count and min are constant per-key buffers — map-side combinable,
+    no sort, no member list, so a 10⁹-member bucket is one
+    aggregation row, not an unbounded buffer.
+
+    EAGER: the census job runs here. Contract on ``band_df`` — callers
+    hand in a frame that is both (1) cheap to rescan (a cached frame,
+    checkpoint or shuffle output): the consumers' joins scan it again;
+    and (2) DETERMINISTIC across rescans: if a cache is evicted and
+    the input re-evaluates non-deterministically (sampling,
+    monotonically_increasing_id, first/any aggregates), the census and
+    the later joins can disagree — an over-cap bucket slipping through
+    whole, or members of a flagged bucket dropped. Every in-engine
+    band frame is a pure hash of (id, text/vector), so this holds by
+    construction; external callers must preserve it."""
+    census = (
+        band_df.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__anchor"))
         .filter(F.col("__n") > max_bucket_size)
-        .select("band_idx", "band_hash", "id1")
     )
-    return (
-        band_df.join(anchors, ["band_idx", "band_hash"])
-        .select("id1", F.col(id_col).alias("id2"))
-        .filter(F.col("id1") < F.col("id2"))
-        .dropDuplicates()
+    head = census.limit(COLLECT_KEY_LIMIT + 1).collect()
+    n_over = len(head)
+    if n_over <= COLLECT_KEY_LIMIT:
+        census = F.broadcast(
+            band_df.sparkSession.createDataFrame(head, schema=census.schema)
+        )
+    else:
+        n_over = census.count()
+        if n_over <= BROADCAST_KEY_LIMIT:
+            census = F.broadcast(census)
+    return BucketCensus(n_over, census)
+
+
+def _census_keys(census: BucketCensus) -> list[str]:
+    return [c for c in census.frame.columns if c not in ("__n", "__anchor")]
+
+
+def _census_report(census: BucketCensus) -> DataFrame:
+    """The oversized report: one row per over-cap bucket,
+    ``(key_cols…, bucket_n, anchor_id)`` — bucket size and smallest
+    member id, no member list. A projection of the census, so zero
+    extra jobs (a pure LocalRelation projection when the census was
+    collected). A >cap bucket is usually a boilerplate cluster worth
+    handling as a group (keep one member) rather than pairwise."""
+    return census.frame.select(
+        *_census_keys(census),
+        F.col("__n").alias("bucket_n"),
+        F.col("__anchor").alias("anchor_id"),
     )
 
 
 def _census_star_pairs(
-    band_df: DataFrame, id_col: str, census: DataFrame
+    band_df: DataFrame, id_col: str, census: BucketCensus
 ) -> DataFrame:
-    """oversized_bucket_star_pairs, fed from a precomputed
-    _counted_census_plan census instead of re-aggregating the band
-    frame for its anchors — the census's ``__anchor`` IS min(id) per
-    oversized bucket. One equi-join (broadcast when the census rode
-    the LocalRelation/hint ladder) fans each mega-bucket member out
-    against its anchor; same linear-per-bucket bound and downstream
-    Jaccard verification as the standalone form."""
-    anchors = census.select(
+    """Linear-cost candidate recovery for the buckets candidate_pairs
+    drops: pair every member of an over-cap bucket with the bucket's
+    smallest id (the census ``__anchor``) instead of all-pairs. O(bucket)
+    rows per bucket, not O(bucket²), so a million-doc boilerplate
+    cluster costs a million candidate rows on one key — shuffleable,
+    not explosive. Downstream verification still applies, so
+    false-positive bucket members are discarded; true boilerplate
+    clusters end up connected through the anchor and collapse to one
+    survivor in connected-components dedup. One equi-join of the band
+    frame against the census (broadcast on its ladder), no
+    collect_list — a 10⁹-member bucket streams through the join."""
+    anchors = census.frame.select(
         "band_idx", "band_hash", F.col("__anchor").alias("id1")
     )
     return (
@@ -307,196 +367,27 @@ def _census_star_pairs(
     )
 
 
-def _census_report(census: DataFrame) -> DataFrame:
-    """The oversized_buckets report derived from a precomputed census:
-    (band_idx, band_hash, bucket_n, anchor_id), zero extra jobs — when
-    the census was collected (the common tiny/empty case) this is a
-    pure LocalRelation projection."""
-    return census.select(
-        "band_idx", "band_hash",
-        F.col("__n").alias("bucket_n"),
-        F.col("__anchor").alias("anchor_id"),
-    )
-
-
-def oversized_bucket_keys(
-    band_df: DataFrame, max_bucket_size: int,
-    key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
-) -> DataFrame:
-    """Band-bucket keys whose member count exceeds the cap — the RARE
-    set the cap machinery branches on. count-only hash aggregation:
-    map-side combinable, no sort, constant per-key buffer. Output is
-    at most |band_df| / max_bucket_size rows of small key columns —
-    usually empty-to-tiny, but a bound in ROWS, not bytes: cap sites
-    COUNT it first and pick the join strategy from the count
-    (_counted_key_plan) rather than force a broadcast blind."""
-    return (
-        band_df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-        .select(*key_cols)
-    )
-
-
-# Oversized-key sets up to this many rows ride an explicit broadcast
-# (~2M (int, long) keys ≈ the session's 64 MB autoBroadcastJoinThreshold
-# in unsafe-row bytes); beyond it the cap joins fall back to unhinted
-# (AQE-planned) joins rather than force a multi-GB broadcast.
-BROADCAST_KEY_LIMIT = 2_000_000
-# ...and sets up to this many rows are collected to the driver and
-# re-shipped as a literal LocalRelation — the keys cross the driver
-# either way under a broadcast, and a local frame saves re-running
-# the key-aggregation subtree in each of the two cap joins.
-COLLECT_KEY_LIMIT = 100_000
-
-
-def _counted_key_plan(
-    band_df: DataFrame, max_bucket_size: int, key_cols: tuple[str, ...],
-) -> tuple[int, DataFrame]:
-    """Shared first phase of the cap sites: build the oversized-key
-    frame and COUNT it (one count-only hash-agg job — map-side
-    combined, output ≤ |band_df|/cap rows). The count picks the join
-    strategy instead of guessing (r10 advisor, measured r11):
-
-    - 0 keys (the overwhelmingly common clean-corpus case): the caller
-      skips the cap joins entirely — no anti-join, no shuffle, the
-      band frame passes through untouched;
-    - ≤ BROADCAST_KEY_LIMIT: explicit broadcast — the big band side
-      never shuffles (at 100 TB an unhinted plan pays a full shuffle
-      WRITE of the band frame even when AQE later converts the join,
-      because the SMJ map stages are already scheduled; measured
-      +15-28% anchor-normalized on the cap-heavy bench paths);
-    - above the limit (pathological high-duplication corpus): unhinted
-      joins — AQE plans them, nothing is force-broadcast into an OOM.
-
-    The count job is why the band-frame contract demands cheap
-    DETERMINISTIC rescans (see capped_bucket_members).
-
-    Tiny key sets (≤ COLLECT_KEY_LIMIT) are additionally COLLECTED
-    into a literal local frame: the anti/semi joins then broadcast a
-    LocalRelation instead of re-running the key aggregation subtree
-    once per join (the count already executed it; exchange reuse
-    between a count and two later joins is not guaranteed).
-
-    r16: the count and the collect are FUSED into one bounded
-    limit-collect — the r15 form paid TWO driver actions (count, then
-    collect) on every cap site whose key set was non-empty-but-tiny,
-    and at bench scale the action round-trip IS the cap site's cost.
-    ≤ COLLECT_KEY_LIMIT rows: len(rows) is the exact count and the
-    rows are already in hand. Above it (pathological high-duplication
-    corpus), fall back to the counted strategy pick — same ladder,
-    one extra action only on that rare branch."""
-    over = oversized_bucket_keys(band_df, max_bucket_size, key_cols)
-    head = over.limit(COLLECT_KEY_LIMIT + 1).collect()
-    n_over = len(head)
-    if 0 < n_over <= COLLECT_KEY_LIMIT:
-        spark = band_df.sparkSession
-        over = F.broadcast(
-            spark.createDataFrame(head, schema=over.schema)
-        )
-    elif n_over > COLLECT_KEY_LIMIT:
-        n_over = over.count()
-        if n_over <= BROADCAST_KEY_LIMIT:
-            over = F.broadcast(over)
-    return n_over, over
-
-
-def _counted_census_plan(
-    band_df: DataFrame, id_col: str, max_bucket_size: int,
-    key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
-) -> tuple[int, DataFrame]:
-    """ONE oversized-bucket census per cap site (r11 verdict, What's
-    wrong #1): ``(key_cols…, __n, __anchor)`` — count + min(id) per
-    band bucket, filtered to > cap. The r11 form answered "which
-    buckets exceed the cap, and by how much?" THREE separate times
-    over the same cached band frame (a count-only key aggregate inside
-    _counted_key_plan, a count+min anchor aggregate in
-    oversized_bucket_star_pairs, and a count+min report aggregate in
-    oversized_buckets) — measured as q182's 2.06× anchor-normalized
-    regression plus a consistent +15-20% on the whole cap family. This
-    census is the single source all three consumers derive from:
-
-    - the key COUNT (len/count of this frame) picks the join strategy,
-      exactly as _counted_key_plan does;
-    - ``select(key_cols)`` is the anti/semi-join key set;
-    - ``__anchor`` seeds the anchor-star recovery pairs;
-    - renamed to (bucket_n, anchor_id) it IS the oversized report.
-
-    Same strategy ladder as _counted_key_plan — collected to a literal
-    broadcast LocalRelation when tiny (≤ COLLECT_KEY_LIMIT),
-    broadcast-hinted when it fits BROADCAST_KEY_LIMIT, unhinted AQE
-    plan beyond. The clean-corpus case (count = 0) builds the empty
-    LocalRelation IN PYTHON with no second action — an unconditional
-    collect() re-runs the whole aggregation as a second job on every
-    clean cap site, which an early r12 build paid as a measured ~1.4×
-    on q20's bench (the count already proved the frame empty; there is
-    nothing to fetch). min() adds a constant per-key aggregation
-    buffer next to the count — still map-side combinable, no sort.
-    Same rescannable-AND-DETERMINISTIC contract on ``band_df`` as
-    capped_bucket_members; EAGER (one count job) like
-    _counted_key_plan."""
-    census = (
-        band_df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__anchor"))
-        .filter(F.col("__n") > max_bucket_size)
-    )
-    # ONE bounded limit-collect decides the ladder AND fetches the
-    # rows (r16, same fusion as _counted_key_plan above): the r15 form
-    # paid count + collect — two actions — on every cap site with a
-    # non-empty census, which q182/q186/q187/q188 all have at sf0.1.
-    head = census.limit(COLLECT_KEY_LIMIT + 1).collect()
-    n_over = len(head)
-    spark = band_df.sparkSession
-    if n_over == 0:
-        census = F.broadcast(
-            spark.createDataFrame([], schema=census.schema)
-        )
-    elif n_over <= COLLECT_KEY_LIMIT:
-        census = F.broadcast(
-            spark.createDataFrame(head, schema=census.schema)
-        )
-    else:
-        n_over = census.count()
-        if n_over <= BROADCAST_KEY_LIMIT:
-            census = F.broadcast(census)
-    return n_over, census
-
-
 def capped_bucket_members(
     band_df: DataFrame, id_col: str, max_bucket_size: int,
-    key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
+    census: BucketCensus,
 ) -> DataFrame:
-    """Keep the ``max_bucket_size`` smallest ``id_col`` values per band
+    """Keep the ``max_bucket_size`` smallest ``id_col`` values per
     bucket, preserving every column of ``band_df`` — the cap-smallest
-    primitive behind the cross-corpus reference indexes.
+    primitive behind the cross-corpus reference indexes. ``census`` is
+    ``_counted_census_plan`` of this band frame at this cap; its key
+    columns are the bucket key.
 
-    Two-phase with a COUNTED first phase (r9 verdict ask #1; strategy
-    rework r11): a count-only hash aggregate finds (and counts) the
-    rare oversized keys first. Zero oversized keys — the common case —
-    short-circuits to the band frame itself: no joins, no sort, no
-    extra shuffle (the r9 form sorted EVERY bucket; the r10 form still
-    paid a broadcast anti-join). Otherwise the common ≤cap buckets
-    pass an anti-join against the key set (broadcast when the count
-    says it fits, unhinted AQE plan when a pathological corpus makes
-    it huge — see _counted_key_plan), and only the flagged keys'
-    members pay the spillable row_number sort, confined to the
-    semi-joined branch. Semantics identical in every branch; this
-    function is EAGER (one count job) by design.
-
-    Contract on ``band_df`` — callers hand in a frame that is both
-    (1) cheap to rescan (a cached frame or a shuffle output): the
-    key-count pass is a second scan; and (2) DETERMINISTIC across
-    rescans: if the cache is evicted and the input re-evaluates
-    non-deterministically (sampling, monotonically_increasing_id,
-    first/any aggregates), the count phase and the join phases can
-    disagree — an over-cap bucket slipping through whole, or members
-    of a flagged bucket dropped. Every in-engine band frame is a pure
-    hash of (id, text/vector), so this holds by construction;
-    external callers must preserve it."""
-    n_over, over = _counted_key_plan(band_df, max_bucket_size, key_cols)
-    if n_over == 0:
+    No over-cap bucket — the common case — returns the band frame
+    itself: no joins, no sort, no extra shuffle. Otherwise the common
+    ≤cap buckets pass an anti-join against the census keys untouched,
+    and only the flagged buckets' members pay the spillable
+    row_number sort, confined to the semi-joined branch. Same
+    rescannable-AND-deterministic contract on ``band_df`` as the
+    census."""
+    if census.n_over == 0:
         return band_df
-    keys = list(key_cols)
+    keys = _census_keys(census)
+    over = census.frame.select(*keys)
     common = band_df.join(over, keys, "left_anti")
     w = Window.partitionBy(*keys).orderBy(id_col)
     rare = (
@@ -509,49 +400,28 @@ def capped_bucket_members(
 
 
 def candidate_pairs(
-    band_df: DataFrame, id_col: str, max_bucket_size: int = 1000,
-    _census: tuple[int, DataFrame] | None = None,
+    band_df: DataFrame, id_col: str, census: BucketCensus,
 ) -> DataFrame:
-    """Pairs of ids sharing a band bucket, id1 < id2; mega-buckets are
-    dropped (boilerplate clusters would quadratically explode one
-    reducer) — detect them with ``oversized_buckets`` on the same
-    band frame.
+    """Pairs of ids sharing a band bucket, id1 < id2. ``census`` is
+    ``_counted_census_plan`` of this band frame: its over-cap buckets
+    are dropped (a boilerplate cluster would quadratically explode one
+    reducer) — _census_report observes them, _census_star_pairs
+    recovers them linearly.
 
-    Two-phase cap with a COUNTED first phase (r9 verdict ask #1;
-    strategy rework r11): a count-only hash aggregate (map-side
-    combinable, no sort) finds AND COUNTS the rare >cap bucket keys.
-    Zero keys — the common case — short-circuits: no anti-join at
-    all, the survivors are the band frame. Otherwise an anti-join
-    (broadcast when the count fits BROADCAST_KEY_LIMIT, unhinted
-    AQE plan when a pathological corpus overflows it — see
-    _counted_key_plan) drops the flagged rows, and THEN the survivors
-    are collected into per-bucket arrays — bounded by construction,
-    since every surviving bucket has ≤ max_bucket_size members — and
-    pairs are expanded inside the array. The r9 form reached the same
-    bound via a window count, which sorted EVERY bucket to answer a
-    question (is this bucket oversized?) that a hash count answers
-    without sorting — a measured +8-19% constant factor on the common
-    case. Same rescannable-AND-deterministic contract on ``band_df``
-    as capped_bucket_members; EAGER (one count job) like it.
-    Singleton buckets flow through the collect (buffer of one) and
-    drop at the size filter.
-
-    ``_census`` (internal): a precomputed ``_counted_census_plan``
-    result for THIS band frame — callers that also consume the
-    oversized report / anchor-star seeds (near_dup_frames,
-    srp_near_dup_frames) pass it so the whole cap site pays exactly
-    one census aggregation instead of re-deriving the key set here
-    (the r11 verdict's q182 finding)."""
+    No over-cap bucket skips the anti-join: the survivors are the band
+    frame. Otherwise an anti-join against the census keys drops the
+    flagged rows, and THEN the survivors are collected into per-bucket
+    arrays — bounded by construction, since every surviving bucket has
+    ≤ max_bucket_size members — and pairs are expanded inside the
+    array. The hash census answers "is this bucket oversized?" without
+    the sort a window count would pay on every bucket. Singleton
+    buckets flow through the collect (buffer of one) and drop at the
+    size filter."""
     rows = band_df.select("band_idx", "band_hash", id_col)
-    if _census is not None:
-        n_over, census = _census
-        over = census.select("band_idx", "band_hash")
-    else:
-        n_over, over = _counted_key_plan(rows, max_bucket_size,
-                                         ("band_idx", "band_hash"))
     kept = (
-        rows if n_over == 0
-        else rows.join(over, ["band_idx", "band_hash"], "left_anti")
+        rows if census.n_over == 0
+        else rows.join(census.frame.select("band_idx", "band_hash"),
+                       ["band_idx", "band_hash"], "left_anti")
     )
     buckets = (
         kept.groupBy("band_idx", "band_hash")
@@ -573,6 +443,25 @@ def candidate_pairs(
         .select("p.id1", "p.id2")
         .dropDuplicates()
     )
+
+
+def _capped_candidates(
+    band_df: DataFrame, id_col: str, max_bucket_size: int,
+    recover_oversized: bool = False,
+) -> tuple[DataFrame, BucketCensus]:
+    """The within-corpus cap site in one call: ONE census of
+    ``band_df`` (EAGER, same contract), its capped candidate pairs,
+    plus — with ``recover_oversized`` — the anchor-star pairs of the
+    over-cap buckets. Returns the pairs and the census, so callers
+    report ``_census_report(census)`` / ``census.n_over`` at no extra
+    job."""
+    census = _counted_census_plan(band_df, id_col, max_bucket_size)
+    cand = candidate_pairs(band_df, id_col, census)
+    if recover_oversized and census.n_over > 0:
+        cand = cand.unionByName(
+            _census_star_pairs(band_df, id_col, census)
+        ).dropDuplicates()
+    return cand, census
 
 
 def verify_jaccard(
@@ -681,31 +570,19 @@ def near_dup_frames(
     hs_arr.cache()
     sig = _signatures_from_sets(hs_arr, id_col, num_hashes, portable)
     band_df = lsh_bands(sig, id_col, bands, rows, portable)
-    # The two-phase cap scans the band frame twice (key counts, then
-    # the anti-join collect); cache it so the num_hashes-per-doc
-    # signature stage runs once. Tiny rows — (id, band_idx int,
-    # band_hash long) × bands per doc; released by the caller via the
-    # "cached" entry, same contract as hs_arr above.
+    # The cap site scans the band frame twice (the census, then the
+    # candidate collect); cache it so the num_hashes-per-doc signature
+    # stage runs once. Tiny rows — (id, band_idx int, band_hash long)
+    # × bands per doc; released by the caller via the "cached" entry,
+    # same contract as hs_arr above.
     band_df.cache()
-    # ONE bucket census (key count + strategy pick + anchor-star seeds
-    # + the oversized report all derive from it) — the r11 form paid
-    # three-plus same-key aggregations of this cached frame for the
-    # same information, measured as q182's 2.06× regression (r11
-    # verdict, What's wrong #1 / next-round ask #2).
-    n_over, census = _counted_census_plan(band_df, id_col, max_bucket_size)
-    cand = candidate_pairs(band_df, id_col, max_bucket_size,
-                           _census=(n_over, census))
-    if recover_oversized and n_over > 0:
-        cand = cand.unionByName(
-            _census_star_pairs(band_df, id_col, census)
-        ).dropDuplicates()
+    cand, census = _capped_candidates(
+        band_df, id_col, max_bucket_size, recover_oversized
+    )
     return {
         "pairs": verify_jaccard_hashed(cand, hs_arr, id_col, threshold),
         "oversized": _census_report(census),
-        # the census already counted the oversized buckets — callers
-        # that only need the NUMBER (CorpusStats) read this instead of
-        # paying a count() action on the report frame (r16)
-        "n_oversized": n_over,
+        "n_oversized": census.n_over,
         "cached": [hs_arr, band_df],
     }
 
@@ -766,16 +643,16 @@ def cross_near_dup_frames(
     - candidate generation is ONE equi-join of the two band frames on
       (band_idx, band_hash) — new×ref only, never a self-join;
     - skew cap: per band bucket, the REF side keeps its
-      ``max_bucket_size`` smallest ids (row_number window — spillable
-      sort, bounded per-key state), so one boilerplate
-      mega-bucket in the reference costs O(new_k · cap) join rows,
-      not O(new_k · ref_k). Capping ref (not new) keeps per-new-doc
+      ``max_bucket_size`` smallest ids (capped_bucket_members off one
+      census of the ref band frame), so one boilerplate mega-bucket
+      in the reference costs O(new_k · cap) join rows, not
+      O(new_k · ref_k). Capping ref (not new) keeps per-new-doc
       recall degradation bounded and observable: dropped buckets are
-      returned in ``oversized`` (ref-side, with sizes). Unlike the
-      within-corpus case there is no anchor-star recovery — a capped
-      bucket still retains ``cap`` verifiable representatives per
-      band, and a new doc near-identical to the cluster collides with
-      them in every band;
+      returned in ``oversized`` (ref-side, with sizes — the census
+      report, no extra job). Unlike the within-corpus case there is
+      no anchor-star recovery — a capped bucket still retains ``cap``
+      verifiable representatives per band, and a new doc
+      near-identical to the cluster collides with them in every band;
     - verification: exact hashed-set Jaccard across the two frames
       (the within-frame verify_jaccard_hashed can't be reused as-is —
       its two sides index one frame), same int/int ratio semantics.
@@ -784,8 +661,8 @@ def cross_near_dup_frames(
     band buckets over the cap), and ``cached`` — the frames this plan
     caches: the two hashed-shingle frames (each side feeds BOTH the
     signature stage and the verify join) and the ref band frame (the
-    two-phase cap and the oversized census scan it four times). The
-    caches are the caller's to release:
+    cap scans it up to three times). The caches are the caller's to
+    release:
     unpersist each frame in ``cached`` once ``pairs``/``oversized``
     are fully materialized (update_corpus_increment's finally-block
     pattern) — otherwise repeated invocations accumulate pinned
@@ -804,27 +681,18 @@ def cross_near_dup_frames(
 
     hs_new, bands_new = _side(new_df)
     hs_ref, bands_ref = _side(ref_df)
-    # The two-phase cap scans the ref band frame three times (key
-    # counts, common anti-join, rare semi-join) and ``oversized`` a
-    # fourth — cache it so the 64-hash signature stage runs once.
-    # Tiny rows: (id, band_idx int, band_hash long) × bands per doc.
+    # The cap scans the ref band frame up to three times (census,
+    # common anti-join, rare semi-join) — cache it so the 64-hash
+    # signature stage runs once. Tiny rows: (id, band_idx int,
+    # band_hash long) × bands per doc.
     bands_ref.cache()
 
-    # Cap-smallest-ids via the two-phase capped_bucket_members (count
-    # first, window-sort only the rare oversized keys) — the r9 form's
-    # row_number window sorted EVERY ref bucket; the r8 array form
-    # buffered the full uncapped bucket in one aggregation row. Ids are
-    # unique per (band_idx, band_hash) — one band per band_idx per doc —
-    # so cap-smallest-ids semantics are exact.
+    # Ids are unique per (band_idx, band_hash) — one band per band_idx
+    # per doc — so cap-smallest-ids semantics are exact.
+    census = _counted_census_plan(bands_ref, id_col, max_bucket_size)
     capped_ref = capped_bucket_members(
-        bands_ref, id_col, max_bucket_size
+        bands_ref, id_col, max_bucket_size, census
     ).select("band_idx", "band_hash", F.col(id_col).alias("__ref_id"))
-    oversized = (
-        bands_ref.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min(id_col).alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
 
     cand = (
         bands_new.select("band_idx", "band_hash", F.col(id_col).alias("id_new"))
@@ -849,7 +717,7 @@ def cross_near_dup_frames(
     )
     return {
         "pairs": pairs,
-        "oversized": oversized,
+        "oversized": _census_report(census),
         "cached": [hs_new, hs_ref, bands_ref],
     }
 
@@ -956,18 +824,14 @@ def cross_ref_index_frames(
     degradation is bounded — cap representatives per band survive —
     but it should be MONITORED, not silent).
 
-    Bounded per-key state throughout (the r8 form collect_list'd the
-    full bucket before slicing — an unbounded aggregation-buffer row
-    on exactly the mega-bucket input the cap guards against), and
-    two-phase since r11 (the r9/r10 form paid a row_number window —
-    a full sort of the band frame — on EVERY reference bucket, the
-    heaviest remaining site of the pattern the r9-ask removed):
-    cap-smallest-ids via ``capped_bucket_members`` — count-only hash
-    agg finds the rare >cap keys, the common ≤cap buckets pass a
-    broadcast anti-join untouched, only flagged keys pay the spillable
-    sort; oversized detection is count+min aggregates. Build-once
-    amortization is unchanged: the extra count scan of the band frame
-    is paid once per reference corpus."""
+    Bounded per-key state throughout: ONE eager census of the band
+    frame (``_counted_census_plan`` — count + min per bucket) finds
+    the rare >cap buckets; cap-smallest-ids via
+    ``capped_bucket_members`` passes the common ≤cap buckets through
+    an anti-join untouched and only the flagged buckets pay the
+    spillable sort; ``oversized`` is the census report, no extra job.
+    The census scan of the band frame is paid once per reference
+    corpus, amortized with the index."""
     rows = num_hashes // bands
     ref_sh = shingles(
         spread_by_id(ref_df, id_col), id_col, text_col, shingle_n
@@ -978,8 +842,9 @@ def cross_ref_index_frames(
         F.col(id_col).alias("id_ref"),
         F.explode(band_structs(bands, rows, portable)).alias("band"),
     ).select("id_ref", "band.band_idx", "band.band_hash")
+    census = _counted_census_plan(ref_bands, "id_ref", max_bucket_size)
     index = (
-        capped_bucket_members(ref_bands, "id_ref", max_bucket_size)
+        capped_bucket_members(ref_bands, "id_ref", max_bucket_size, census)
         .select("band_idx", "band_hash", "id_ref")
         .join(
             ref_hs.select(
@@ -988,13 +853,7 @@ def cross_ref_index_frames(
             "id_ref",
         )
     )
-    oversized = (
-        ref_bands.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("id_ref").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
-    return {"index": index, "oversized": oversized}
+    return {"index": index, "oversized": _census_report(census)}
 
 
 def cross_near_dup_pairs_indexed(
@@ -1159,10 +1018,14 @@ def dedup_exact_by_content(
 # size below this is DRIVER round-trips, ~2 actions + rounds×(1 action
 # + broadcast jobs); r16 probes measured q181 at 72 jobs / 5.1 s
 # driver-only and q188 at 105 jobs / 8.9 s driver-only, about half of
-# each query's wall). 100k (src, dst) longs is ~3 MB on the driver —
-# two orders below spark.driver.maxResultSize — and near-dup graphs
-# are SPARSE by construction (pairs survive a similarity threshold),
-# so at 100 TB the loop path below remains the scale fallback.
+# each query's wall). The limit counts SYMMETRIC rows — both
+# directions of every edge — so it is 50k undirected edges. The driver
+# cost is the collected PySpark Row objects plus their createDataFrame
+# re-serialization: tens of MB of Python heap at the limit, not 16
+# bytes per edge — still well within driver memory, but size any
+# future bump from Row objects. Near-dup graphs are SPARSE by
+# construction (pairs survive a similarity threshold), so at 100 TB
+# the loop path below remains the scale fallback.
 CC_LOCAL_EDGE_LIMIT = 100_000
 
 _CC_INTEGRAL_TYPES = ("long", "integer", "int", "short", "byte", "bigint")
@@ -1266,7 +1129,7 @@ def connected_components(
     )
     sym = sym.localCheckpoint(eager=True)
 
-    # SCALE-ADAPTIVE ladder (r16; the _counted_key_plan pattern): the
+    # SCALE-ADAPTIVE ladder (r16; the _counted_census_plan pattern): the
     # checkpoint above already materialized the edge set (pairs compute
     # exactly once either way), so one bounded limit-collect decides —
     # small graph ⇒ label on the driver in one pass (zero loop actions,
@@ -1766,6 +1629,8 @@ def joint_near_dup_survivors(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from us_immigration_data_lake_spark.operators.similarity import (
         srp_near_dup_frames,
     )
@@ -1779,7 +1644,11 @@ def joint_near_dup_survivors(
     # signature/census jobs overlap instead of serializing, and so
     # does their JVM-side planning. Both builders are pure plan
     # constructors over the same input frame; the union below is the
-    # only synchronization point.
+    # only synchronization point. Each builder is wrapped so its pool
+    # thread inherits the caller's local properties and tags (job
+    # group, scheduler pool): under pinned-thread mode a plain pool
+    # thread starts with none, and the builders' census/checkpoint
+    # jobs would escape the caller's cancellation and accounting.
     def _text_pairs() -> DataFrame:
         return near_dup_frames(
             df, id_col, text_col, shingle_n=shingle_n,
@@ -1796,9 +1665,16 @@ def joint_near_dup_survivors(
             max_bucket_size=max_bucket_size, recover_oversized=True,
         )["pairs"].select("id1", "id2")
 
+    session = df.sparkSession
+    inherit = inheritable_thread_target(session)
+    if inherit is session:
+        # pinned-thread mode off: PySpark hands the session back, and
+        # pool threads have no per-thread JVM properties to inherit
+        def inherit(fn):
+            return fn
     with ThreadPoolExecutor(max_workers=2) as pool:
-        t_fut = pool.submit(_text_pairs)
-        s_fut = pool.submit(_sem_pairs)
+        t_fut = pool.submit(inherit(_text_pairs))
+        s_fut = pool.submit(inherit(_sem_pairs))
         text_pairs, sem_pairs = t_fut.result(), s_fut.result()
     pairs = text_pairs.unionByName(sem_pairs).dropDuplicates()
     return dedup_survivors(df, pairs, id_col)
@@ -2460,7 +2336,7 @@ def minhash_estimate_calibration(
         sig.select(id_col, "signature"), id_col, bands,
         num_hashes // bands, portable,
     )
-    pairs = candidate_pairs(band_df, id_col, max_bucket_size)
+    pairs, _ = _capped_candidates(band_df, id_col, max_bucket_size)
     s1 = sig.select(
         F.col(id_col).alias("id1"),
         F.col("signature").alias("sig1"),

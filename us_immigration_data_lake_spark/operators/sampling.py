@@ -518,9 +518,9 @@ def per_group_cap(
     sort is bounded by the group's size, spillable, and the common
     web-corpus group (a domain) is far below partition scale; a
     DEGENERATE group (one source = half the corpus) pays a single-
-    partition sort — if that is your distribution, cap via the counted
-    two-phase machinery (operators/dedup.py:_counted_key_plan) or
-    pre-aggregate sources. Unlike the LSH bucket cap this op's OUTPUT
+    partition sort — if that is your distribution, cap via the bucket
+    census machinery (operators/dedup.py:_counted_census_plan +
+    capped_bucket_members) or pre-aggregate sources. Unlike the LSH bucket cap this op's OUTPUT
     is the capped set itself, so the window rank is the semantics, not
     an implementation shortcut."""
     from pyspark.sql import Window

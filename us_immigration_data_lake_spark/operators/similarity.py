@@ -742,32 +742,22 @@ def srp_near_dup_frames(
     contract; un-released entries fall back to LRU eviction).
     """
     from us_immigration_data_lake_spark.operators.dedup import (
+        _capped_candidates,
         _census_report,
-        _census_star_pairs,
-        _counted_census_plan,
-        candidate_pairs,
     )
 
     sig = _srp_sig_frame(df, id_col, vec_col, dim, num_bits, seed)
     band_df = sig.select(
         "__id", F.lit(0).alias("band_idx"), F.col("bucket").alias("band_hash")
     )
-    # two-phase candidate_pairs scans the bucket frame twice (key
-    # counts, then the anti-join collect); cache the three tiny
-    # columns so the SRP signature arithmetic runs once — released by
-    # the caller via the "cached" entry (the text path's contract).
+    # the cap site scans the bucket frame twice (the census, then the
+    # candidate collect); cache the three tiny columns so the SRP
+    # signature arithmetic runs once — released by the caller via the
+    # "cached" entry (the text path's contract).
     band_df.cache()
-    # ONE bucket census shared by the key count, the anchor-star seeds
-    # and the oversized report — the text path's r12 consolidation
-    # (dedup.near_dup_frames), applied identically here so cap-site
-    # cost can never drift between the two pipelines.
-    n_over, census = _counted_census_plan(band_df, "__id", max_bucket_size)
-    cand = candidate_pairs(band_df, "__id", max_bucket_size,
-                           _census=(n_over, census))
-    if recover_oversized and n_over > 0:
-        cand = cand.unionByName(
-            _census_star_pairs(band_df, "__id", census)
-        ).dropDuplicates()
+    cand, census = _capped_candidates(
+        band_df, "__id", max_bucket_size, recover_oversized
+    )
     v1 = sig.select(
         F.col("__id").alias("id1"), F.col("__v").alias("v1"),
         F.col("__n").alias("n1"),
@@ -788,8 +778,7 @@ def srp_near_dup_frames(
     return {
         "pairs": pairs,
         "oversized": _census_report(census),
-        # counted by the census already — the near_dup_frames contract
-        "n_oversized": n_over,
+        "n_oversized": census.n_over,
         "cached": [band_df],
     }
 
@@ -832,7 +821,8 @@ def srp_multi_table_frames(
 
     Returns the near_dup_frames contract: ``{"pairs": (id1, id2,
     cosine_sim), "oversized": one row per capped (table, bucket),
-    "cached": [band frame], "checkpointed": [signature frame]}`` —
+    "n_oversized": its row count, "cached": [band frame],
+    "checkpointed": [signature frame]}`` —
     ``cached`` is the caller's to ``unpersist()`` after materializing,
     and ``checkpointed`` the caller's to pass to
     ``release_local_checkpoint`` (an eager localCheckpoint's
@@ -844,9 +834,8 @@ def srp_multi_table_frames(
     (candidate_pairs dedups inside the bucket expand).
     """
     from us_immigration_data_lake_spark.operators.dedup import (
+        _capped_candidates,
         _census_report,
-        _counted_census_plan,
-        candidate_pairs,
     )
 
     # one barrier for the L·bits·dim-term signature stage (the
@@ -861,9 +850,7 @@ def srp_multi_table_frames(
         F.posexplode("__buckets").alias("band_idx", "band_hash"),
     ).select("__id", "band_idx", "band_hash")
     band_df.cache()
-    n_over, census = _counted_census_plan(band_df, "__id", max_bucket_size)
-    cand = candidate_pairs(band_df, "__id", max_bucket_size,
-                           _census=(n_over, census))
+    cand, census = _capped_candidates(band_df, "__id", max_bucket_size)
     v1 = sig.select(
         F.col("__id").alias("id1"), F.col("__v").alias("v1"),
         F.col("__n").alias("n1"),
@@ -884,6 +871,7 @@ def srp_multi_table_frames(
     return {
         "pairs": pairs,
         "oversized": _census_report(census),
+        "n_oversized": census.n_over,
         "cached": [band_df],
         "checkpointed": [sig],
     }
@@ -981,15 +969,18 @@ def srp_multi_table_ref_index_frames(
     "oversized": per capped (table, bucket), "num_bits": int,
     "num_tables": int}`` — build ONCE per reference corpus, reused
     every batch/micro-batch; the cap is per (table, bucket) via the
-    SAME capped_bucket_members machinery the banded text index uses
-    (key_cols), so truncation semantics are shared, observable, and
-    already oracle-gated on the text path. ``checkpointed`` holds the
-    eagerly-checkpointed reference signature frame — an index that is
+    SAME census + capped_bucket_members machinery the banded text
+    index uses (census key_cols), so truncation semantics are shared,
+    observable, and already oracle-gated on the text path.
+    ``checkpointed`` holds the eagerly-checkpointed reference
+    signature frame — an index that is
     rebuilt per reference-corpus refresh in a long-lived session
     should hand it to ``operators.storage.release_local_checkpoint``
     once the (cached/persisted) index frame is materialized, or the
     superseded blocks accumulate until driver GC (r14 advisor)."""
     from us_immigration_data_lake_spark.operators.dedup import (
+        _census_report,
+        _counted_census_plan,
         capped_bucket_members,
     )
 
@@ -998,10 +989,12 @@ def srp_multi_table_ref_index_frames(
     ).localCheckpoint(eager=True)  # ref side is batch; computed once
     band = base.select(
         "__id", F.posexplode("__buckets").alias("band_idx", "bucket")
+    ).select("band_idx", "bucket", "__id")
+    census = _counted_census_plan(
+        band, "__id", max_bucket_size, key_cols=("band_idx", "bucket")
     )
     capped = capped_bucket_members(
-        band.select("band_idx", "bucket", "__id"), "__id",
-        max_bucket_size, key_cols=("band_idx", "bucket"),
+        band, "__id", max_bucket_size, census
     ).select("band_idx", "bucket", F.col("__id").alias("id_ref"))
     vectors = base.select(
         F.col("__id").alias("id_ref"),
@@ -1009,13 +1002,7 @@ def srp_multi_table_ref_index_frames(
         F.col("__n").alias("n2"),
     )
     index = capped.join(vectors, "id_ref")
-    oversized = (
-        band.groupBy("band_idx", "bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("__id").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
-    return {"index": index, "oversized": oversized,
+    return {"index": index, "oversized": _census_report(census),
             "num_bits": num_bits, "num_tables": num_tables,
             "checkpointed": [base]}
 
@@ -1062,6 +1049,30 @@ def cross_srp_multi_table_pairs_indexed(
         .filter(F.col("cosine_sim") >= threshold)
         .dropDuplicates(["id_new", "id_ref"])
     )
+
+
+def _capped_srp_ref(
+    sig_ref: DataFrame, max_bucket_size: int
+) -> tuple[DataFrame, DataFrame]:
+    """The single-table SRP reference cap site: ONE census of the
+    signature frame's buckets (dedup._counted_census_plan, keyed on
+    ``bucket``), the ``max_bucket_size`` smallest ids per bucket as
+    (bucket, id_ref), and the oversized report (bucket, bucket_n,
+    anchor_id) — a projection of the same census, no extra job."""
+    from us_immigration_data_lake_spark.operators.dedup import (
+        _census_report,
+        _counted_census_plan,
+        capped_bucket_members,
+    )
+
+    band = sig_ref.select("bucket", "__id")
+    census = _counted_census_plan(
+        band, "__id", max_bucket_size, key_cols=("bucket",)
+    )
+    capped = capped_bucket_members(
+        band, "__id", max_bucket_size, census
+    ).select("bucket", F.col("__id").alias("id_ref"))
+    return capped, _census_report(census)
 
 
 def srp_ref_index(
@@ -1121,15 +1132,14 @@ def srp_ref_index_frames(
     so amortized/streaming semantic ingest can monitor capped recall
     instead of inheriting the truncation silently.
 
-    Bounded per-key state (the r8 form collect_list'd the full bucket
-    before slicing): cap-smallest-ids via the two-phase
-    dedup.capped_bucket_members — count-only hash agg finds the rare
-    oversized buckets, only their members pay the spillable row_number
-    sort, the common ≤cap buckets pass through a broadcast anti-join
-    (r9 verdict ask #1: the r9 row_number form sorted EVERY bucket);
-    oversized detection via count+min aggregates. Extra scans of the
-    per-row SRP signature stage are paid ONCE per reference corpus —
-    the index is built once and cached by the caller.
+    Bounded per-key state: ONE eager bucket census
+    (dedup._counted_census_plan) finds the rare oversized buckets;
+    cap-smallest-ids via dedup.capped_bucket_members passes the common
+    ≤cap buckets through an anti-join and only the flagged buckets'
+    members pay the spillable row_number sort; ``oversized`` is the
+    census report, no extra job. The census scan of the checkpointed
+    signature frame is paid ONCE per reference corpus — the index is
+    built once and cached by the caller.
 
     ``num_bits=None`` → ``recommended_num_bits(ref_df.count())`` —
     SCALE.md's ref-axis rule ("num_bits ≈ 8 + log2(ref scale)") as
@@ -1139,17 +1149,10 @@ def srp_ref_index_frames(
     whether auto-picked or passed through) — pass it to
     cross_srp_pairs_indexed / the streaming wrapper. A query side
     signing with a different width silently matches nothing."""
-    from us_immigration_data_lake_spark.operators.dedup import (
-        capped_bucket_members,
-    )
-
     if num_bits is None:
         num_bits = recommended_num_bits(ref_df.count())
     sig_ref = _srp_sig_frame(ref_df, id_col, vec_col, dim, num_bits, seed)
-    capped = capped_bucket_members(
-        sig_ref.select("bucket", "__id"), "__id", max_bucket_size,
-        key_cols=("bucket",),
-    ).select("bucket", F.col("__id").alias("id_ref"))
+    capped, oversized = _capped_srp_ref(sig_ref, max_bucket_size)
     index = capped.join(
         sig_ref.select(
             F.col("__id").alias("id_ref"),
@@ -1157,12 +1160,6 @@ def srp_ref_index_frames(
             F.col("__n").alias("n2"),
         ),
         "id_ref",
-    )
-    oversized = (
-        sig_ref.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("__id").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
     )
     return {"index": index, "oversized": oversized, "num_bits": num_bits}
 
@@ -1249,26 +1246,7 @@ def cross_srp_near_dup_frames(
     sig_new = _srp_sig_frame(new_df, id_col, vec_col, dim, num_bits, seed)
     sig_ref = _srp_sig_frame(ref_df, id_col, vec_col, dim, num_bits, seed)
 
-    # Cap-smallest-ids via the two-phase dedup.capped_bucket_members
-    # (count first, window-sort only the rare oversized buckets — r9
-    # verdict ask #1), oversized via count+min — no collect_list: the
-    # r8 array form buffered the FULL uncapped bucket in one
-    # aggregation row on exactly the mega-bucket input the cap guards
-    # against (dedup.cross_near_dup_frames, same fix).
-    from us_immigration_data_lake_spark.operators.dedup import (
-        capped_bucket_members,
-    )
-
-    capped_ref = capped_bucket_members(
-        sig_ref.select("bucket", "__id"), "__id", max_bucket_size,
-        key_cols=("bucket",),
-    ).select("bucket", F.col("__id").alias("id_ref"))
-    oversized = (
-        sig_ref.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_n"),
-             F.min("__id").alias("anchor_id"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
+    capped_ref, oversized = _capped_srp_ref(sig_ref, max_bucket_size)
 
     cand = (
         sig_new.select(F.col("__id").alias("id_new"), "bucket")

@@ -38,6 +38,7 @@ from us_immigration_data_lake_spark.operators import multimodal as mm_ops
 from us_immigration_data_lake_spark.operators import similarity as sim_ops
 from us_immigration_data_lake_spark.operators import textstats as ts_ops
 from us_immigration_data_lake_spark.operators import pii as pii_ops
+from us_immigration_data_lake_spark.session import tune_for_oracle
 from us_immigration_data_lake_spark.sources.events import load_events as _load_events
 
 
@@ -74,18 +75,6 @@ def _register(
         )
         return fn
     return deco
-
-
-def _tune(spark: SparkSession) -> None:
-    """Deterministic runtime confs — safe on a session we don't own."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        # a foreign session's default 200 shuffle partitions is pure
-        # overhead at bench scale (AQE coalesces batch shuffles, but
-        # streaming state shuffles use the raw value)
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-    except Exception:
-        pass
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -139,7 +128,7 @@ def _cents(col) -> F.Column:
     bench=True,
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("long")
     base_c = _cents(F.col("l_extendedprice"))
@@ -189,7 +178,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q02_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     d = F.to_date("l_shipdate")
     return (
@@ -231,7 +220,7 @@ def q02_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q03_fact_stay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     joined = li.join(orders, li.l_orderkey == orders.o_orderkey, "inner")
@@ -271,7 +260,7 @@ def q03_fact_stay(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q04_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(
         F.to_date("o_orderdate") < F.lit("1998-03-15").cast("date")
@@ -308,7 +297,7 @@ def q04_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("semi-join", "agg"),
 )
 def q05_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     heavy = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
     return (
@@ -333,7 +322,7 @@ def q05_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("anti-join",),
 )
 def q06_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return anti_join(cust, orders, cust.c_custkey == orders.o_custkey).select(
@@ -364,7 +353,7 @@ _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
     tags=("pivot", "broadcast-join"),
 )
 def q07_segment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     return (
@@ -397,7 +386,7 @@ def q07_segment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("broadcast-join", "left-join", "coalesce"),
 )
 def q08_nation_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     supp = (
@@ -441,7 +430,7 @@ def q08_nation_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q09_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     ranked = top_k_per_group(
         orders,
@@ -476,7 +465,7 @@ def q09_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("rollup",),
 )
 def q10_rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
@@ -508,7 +497,7 @@ def q10_rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("setops",),
 )
 def q11_setops_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust_keys = _t(spark, sf_dir, "customer").select("c_custkey")
     order_keys = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     with_orders = cust_keys.intersect(order_keys).select(
@@ -538,7 +527,7 @@ def q11_setops_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "distinct-agg"),
 )
 def q12_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     return orders.groupBy("o_orderstatus").agg(
@@ -567,7 +556,7 @@ def q12_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("json", "agg"),
 )
 def q13_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     k = F.get_json_object("props", "$.k").cast("long")
     return ev.groupBy("event_type").agg(
@@ -597,7 +586,7 @@ def q13_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q14_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(
@@ -633,7 +622,7 @@ def q14_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q15_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(normalized_text(F.col("text"))).alias("fingerprint"))
@@ -669,7 +658,7 @@ def q15_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q16_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     tok = F.split(F.trim(F.col("text")), r"\s+")
     feat = docs.select(
@@ -723,7 +712,7 @@ def q16_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "quality"),
 )
 def q17_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     feats = ts_ops.text_features(docs, "doc_id", "text")
     scored = ts_ops.quality_score(feats)
@@ -768,7 +757,7 @@ _LANG_CASES_SQL = """
     tags=("textstats", "lang-id"),
 )
 def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     pred = ts_ops.lang_id(docs, "doc_id", "text")
     return pred.groupBy("lang", "predicted_lang").agg(F.count(F.lit(1)).alias("n"))
@@ -802,7 +791,7 @@ def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard"),
 )
 def q19_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     tok = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     sh = docs.select(
@@ -933,7 +922,7 @@ def _minhash_verify_sql(threshold: float) -> str:
     bench=True,
 )
 def q20_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     # the synthetic corpus has no planted duplicates, so the jaccard
     # threshold is set where shared-vocabulary 2-gram overlap still
@@ -994,7 +983,7 @@ _Q21_BIT_TERMS = "\n             + ".join(
     tags=("dedup", "simhash"),
 )
 def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return dedup_ops.simhash(docs, "doc_id", "text", portable=True)
 
@@ -1027,7 +1016,7 @@ def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q22_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     # deliberately the HOF (dim=None) path: the unrolled fixed-dim dot
@@ -1056,7 +1045,7 @@ def q22_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "agg"),
 )
 def q23_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -1131,7 +1120,7 @@ def _q24_oracle_sql() -> str:
     bench=True,
 )
 def q24_srp_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     # plan-embedded width guard: if the dataset is ever regenerated at
     # a different dim, fail loudly instead of silently hashing padded
@@ -1171,7 +1160,7 @@ def q24_srp_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "binary"),
 )
 def q25_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     media = mm_ops.text_as_media(docs, "doc_id", "text")
     return media.select(
@@ -1230,7 +1219,7 @@ def _sink_name(base: str) -> str:
     tags=("streaming", "window"),
 )
 def q26_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(tumbling_agg(stream, "1 hour"), _sink_name("q26_hourly"))
 
@@ -1269,7 +1258,7 @@ def q26_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session-window"),
 )
 def q27_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(session_agg(stream, "10 minutes"), _sink_name("q27_sessions"))
 
@@ -1303,7 +1292,7 @@ def q27_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def q28_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(
         running_user_stats(stream), _sink_name("q28_stateful"), mode="update"
@@ -1346,7 +1335,7 @@ from us_immigration_data_lake_spark.operators.joins import as_of_join  # noqa: E
     tags=("asof-join", "events"),
 )
 def q29_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts"))
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts_us"
@@ -1383,7 +1372,7 @@ def q29_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cube",),
 )
 def q30_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1421,7 +1410,7 @@ def q30_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "strings", "arrays"),
 )
 def q31_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     part = _t(spark, sf_dir, "part")
     words = F.split(F.col("p_name"), " ")
     return part.select(
@@ -1463,7 +1452,7 @@ def q31_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "subquery"),
 )
 def q32_sql_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     from us_immigration_data_lake_spark.sources.catalog import Catalog
 
     Catalog(spark, sf_dir, tables=("orders",)).register_views(prefix="q32_")
@@ -1504,7 +1493,7 @@ def q32_sql_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q33_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     order_cols = [F.to_date("o_orderdate"), F.col("o_orderkey")]
@@ -1540,7 +1529,7 @@ def q33_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "dedup"),
 )
 def q34_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
     return sim_ops.cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.35)
 
@@ -1566,7 +1555,7 @@ def q34_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "tokenize"),
 )
 def q35_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     words = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[A-Za-z]+"), 0)).cast("long")
     nums = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[0-9]+"), 0)).cast("long")
@@ -1607,7 +1596,7 @@ def q35_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "sliding", "events"),
 )
 def q36_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -1667,7 +1656,7 @@ from us_immigration_data_lake_spark.functions.text import title_case  # noqa: E4
     tags=("recode", "fillna", "cast"),
 )
 def q37_recode_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     supp = (
@@ -1710,7 +1699,7 @@ def q37_recode_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "udf-replacement"),
 )
 def q38_title_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     part = _t(spark, sf_dir, "part")
     return part.select("p_partkey", title_case("p_name").alias("name_title"))
 
@@ -1739,7 +1728,7 @@ def q38_title_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dates", "udf-replacement"),
 )
 def q39_sas_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     ship_sas = F.datediff(F.to_date("l_shipdate"), F.lit(SAS_EPOCH).cast("date")).cast("long")
     sas = li.select(
@@ -1778,7 +1767,7 @@ def q39_sas_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("percentile", "agg"),
 )
 def q40_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     return orders.groupBy("o_orderstatus").agg(
@@ -1822,7 +1811,7 @@ def q40_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("fingerprint", "rolling-hash", "dedup"),
 )
 def q41_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     # both sides restrict to docs long enough for a full k+window pass:
     # the library's short-doc fallback (one whole-text hash) is not
     # SQL-portable, and modeling it in the oracle would couple the gate
@@ -1864,7 +1853,7 @@ from us_immigration_data_lake_spark.streaming.windows import (  # noqa: E402
     tags=("streaming", "stream-stream-join"),
 )
 def q42_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     joined = purchase_view_interval_join(stream, "30 minutes")
     return run_to_memory(joined, _sink_name("q42_ssj"), mode="append")
@@ -1928,7 +1917,7 @@ def q42_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "clustering", "iterative"),
 )
 def q43_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     # Candidates via the inverted-index generator (dedup.py:
@@ -1968,7 +1957,7 @@ def q43_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q44_nested_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     props_schema = StructType([StructField("k", LongType(), True)])
     nested = ev.select(
@@ -2014,7 +2003,7 @@ def q44_nested_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("search", "textstats", "topk"),
 )
 def q45_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     tok = F.split(F.trim(F.col("text")), r"\s+")
     tf = F.size(F.filter(tok, lambda t: t == F.lit("spark"))).cast("long")
@@ -2046,7 +2035,7 @@ def q45_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("left-join", "double-agg", "histogram"),
 )
 def q46_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
@@ -2076,7 +2065,7 @@ def q46_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("having", "subquery", "semi-join"),
 )
 def q47_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     big = (
         _t(spark, sf_dir, "lineitem")
@@ -2119,7 +2108,7 @@ def q47_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q48_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.functions.splits import split_label
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return (
         docs.select(split_label(F.col("doc_id"), 80).alias("split"), "lang")
@@ -2158,7 +2147,7 @@ def q48_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("chunking", "textstats"),
 )
 def q49_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.chunk_documents(docs, "doc_id", "text", chunk_tokens=50, overlap=10)
 
@@ -2201,7 +2190,7 @@ def q49_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q50_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
@@ -2257,7 +2246,7 @@ from us_immigration_data_lake_spark.quality import profile_table  # noqa: E402
     tags=("quality", "profile"),
 )
 def q51_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "l_qty_long", F.col("l_quantity").cast("long")
     )
@@ -2299,7 +2288,7 @@ def q51_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dates", "calendar"),
 )
 def q52_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     d = F.to_date("o_orderdate")
     return orders.select(
@@ -2331,7 +2320,7 @@ def q52_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("collect", "agg"),
 )
 def q53_collect_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     return (
@@ -2365,7 +2354,7 @@ def q53_collect_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("grouping-sets",),
 )
 def q54_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     return orders.groupingSets(
         [["o_orderstatus"], ["o_orderpriority"], []],
@@ -2410,7 +2399,7 @@ _Q55_HASHES, _Q55_BANDS = 8, 8
     tags=("dedup", "minhash", "lsh", "portable"),
 )
 def q55_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return dedup_ops.near_dup_pairs(
         docs, "doc_id", "text", shingle_n=2, num_hashes=_Q55_HASHES,
@@ -2455,7 +2444,7 @@ def q55_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "watermark", "append"),
 )
 def q56_stream_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     return run_to_memory(
         tumbling_agg_append(stream, "1 hour", "1 hour"),
@@ -2523,7 +2512,7 @@ def q56_stream_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("search", "bm25", "textstats", "topk"),
 )
 def q57_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bm25_term_scores(
         docs, "doc_id", "text", terms=("vector", "merge", "filter"), k=10
@@ -2593,7 +2582,7 @@ def q57_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("search", "bm25", "multiterm", "topk"),
 )
 def q58_bm25_multiterm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bm25_multiterm_topk(
         docs, "doc_id", "text", terms=("vector", "merge", "filter"), k=20
@@ -2621,7 +2610,7 @@ def q58_bm25_multiterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stream-static", "broadcast"),
 )
 def q59_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return run_to_memory(
@@ -2687,7 +2676,7 @@ def q59_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "quality", "repetition"),
 )
 def q60_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.repetition_stats(docs, "doc_id", "text")
 
@@ -2755,7 +2744,7 @@ _PII_PHONE = _PII["phone"]
 def q61_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.pii import pii_counts, scrub_pii
 
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer")
     nat = _t(spark, sf_dir, "nation")
     k = F.col("c_custkey")
@@ -2823,7 +2812,7 @@ def q61_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "ngram", "top-k"),
 )
 def q62_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.ngram_profile(docs, "text", top_k=25)
 
@@ -2850,7 +2839,7 @@ def q62_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q63_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import stratified_sample
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return stratified_sample(
         docs, "lang", "doc_id", {"en": 25, "fr": 50}
@@ -2896,7 +2885,7 @@ def q63_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "decontamination", "broadcast"),
 )
 def q64_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
@@ -2930,7 +2919,7 @@ _Z_ORACLE = f"""
     tags=("layout", "zorder", "data-skipping"),
 )
 def q65_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -2962,7 +2951,7 @@ def q65_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q66_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.aggregate import salted_sum
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     return salted_sum(
         li,
@@ -3005,7 +2994,7 @@ def q66_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "vocab", "broadcast"),
 )
 def q67_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.oov_rate(docs, "doc_id", "text", vocab_size=100)
 
@@ -3049,7 +3038,7 @@ from us_immigration_data_lake_spark.operators.history import (  # noqa: E402
     tags=("history", "scd2", "window"),
 )
 def q68_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).select(
         "user_id", "event_type", "event_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -3094,7 +3083,7 @@ def q68_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("history", "upsert", "merge"),
 )
 def q69_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     base = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus",
         _cents(F.col("o_totalprice")).alias("total_c"),
@@ -3158,7 +3147,7 @@ from us_immigration_data_lake_spark.operators.quantize import (  # noqa: E402
     tags=("similarity", "quantize"),
 )
 def q70_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     quantized = quantize_int8(emb, "vec_id", "embedding")
     return quantized.select(
@@ -3220,7 +3209,7 @@ def q71_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int8 products are <= 127^2 and dims are small, so the double
     # list_dot_product in the oracle is exact integer arithmetic —
     # same BIGINTs as the engine's zip_with/aggregate fold.
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     quantized = quantize_int8(emb, "vec_id", "embedding")
     queries = quantized.filter(F.col("vec_id") % 50 == 0)
@@ -3251,7 +3240,7 @@ def q71_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q72_salted_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.joins import salted_join
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"),
         _cents(F.col("l_extendedprice")).alias("price_c"),
@@ -3282,7 +3271,7 @@ def q72_salted_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q73_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.streaming.windows import stream_dedup
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     # watermark wider than the testdata's event-time span: state is
     # never evicted mid-run, so the result equals batch DISTINCT even
@@ -3320,7 +3309,7 @@ def q73_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "hll", "agg"),
 )
 def q74_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("n_users_exact"),
@@ -3363,7 +3352,7 @@ def q74_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q75_ranking_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     w = Window.partitionBy("o_orderstatus").orderBy(total_c, "o_orderkey")
@@ -3408,7 +3397,7 @@ def q75_ranking_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q76_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.joins import binned_range_join
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts"))
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
@@ -3469,7 +3458,7 @@ def q76_binned_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard", "postings", "scale"),
 )
 def q77_postings_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     tok = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     sh = docs.select(
@@ -3513,7 +3502,7 @@ def q77_postings_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "percentile", "agg"),
 )
 def q78_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderstatus", _cents(F.col("o_totalprice")).alias("total_c")
     )
@@ -3567,7 +3556,7 @@ def q78_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reshape", "unpivot"),
 )
 def q79_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_nationkey").cast("long").alias("c_nationkey"),
@@ -3605,7 +3594,7 @@ def q79_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q80_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import weighted_sample
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     return weighted_sample(docs, "doc_id", "n_chars", k=50)
 
@@ -3644,7 +3633,7 @@ def q80_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "quality", "perplexity"),
 )
 def q81_unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.unigram_cross_entropy(docs, "doc_id", "text")
 
@@ -3684,7 +3673,7 @@ def q82_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import sample_bucket
     from us_immigration_data_lake_spark.functions.text import token_count
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", token_count(F.lower(F.col("text"))).cast("long").alias("n_tok")
     )
@@ -3723,7 +3712,7 @@ def q82_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q83_resample_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.windows import resample_fill
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     hourly = (
         ev.select(
@@ -3766,7 +3755,7 @@ def q83_resample_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "cohort", "retention"),
 )
 def q84_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     weekly = ev.select(
         "user_id", F.expr("unix_micros(ts) div 604800000000").alias("week")
@@ -3822,7 +3811,7 @@ def q84_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "statistics"),
 )
 def q85_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").cast("decimal(38,0)").alias("x"),
@@ -3874,7 +3863,7 @@ def q85_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "conditional", "sql"),
 )
 def q86_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     is_f = F.col("o_orderstatus") == "F"
@@ -3911,7 +3900,7 @@ def q86_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "fuzzy", "entity-resolution"),
 )
 def q87_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100).select(
         "c_custkey", "c_name", "c_nationkey"
     )
@@ -3960,7 +3949,7 @@ def q87_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q88_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     cell = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.sum(_cents(F.col("o_totalprice"))).alias("rev_c")
@@ -4000,7 +3989,7 @@ def q88_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q89_positional_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     total_c = _cents(F.col("o_totalprice"))
     w = (
@@ -4043,7 +4032,7 @@ def q89_positional_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("quality", "checksum", "reconciliation"),
 )
 def q90_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     row_key = F.concat_ws(
         "|",
@@ -4094,7 +4083,7 @@ def q90_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("session-window", "batch", "agg"),
 )
 def q91_batch_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
@@ -4161,7 +4150,7 @@ def _q92_oracle_sql() -> str:
     tags=("similarity", "ivf", "ann"),
 )
 def q92_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 3)
     return sim_ops.ivf_knn(
@@ -4193,7 +4182,7 @@ def q92_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "argmax"),
 )
 def q93_argmax_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     pair = F.struct(
         _cents(F.col("o_totalprice")).alias("c"), F.col("o_orderkey").alias("k")
@@ -4256,7 +4245,7 @@ from us_immigration_data_lake_spark.operators.audit import (  # noqa: E402
     tags=("audit", "anti-join", "quality"),
 )
 def q94_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     lineitem = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
@@ -4302,7 +4291,7 @@ from us_immigration_data_lake_spark.operators.basket import (  # noqa: E402
     tags=("basket", "cooccurrence", "self-join"),
 )
 def q95_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     lineitem = _t(spark, sf_dir, "lineitem")
     return cooccurrence_pairs(
         lineitem, "l_orderkey", "l_partkey", min_support=2
@@ -4334,7 +4323,7 @@ def q95_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("binning", "histogram", "agg"),
 )
 def q96_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     c = _cents(F.col("o_totalprice"))
     w = 2_500_000  # $25k bins
@@ -4391,7 +4380,7 @@ def q96_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q97_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.joins import as_of_join
 
-    _tune(spark)
+    tune_for_oracle(spark)
     e = load_events(spark, sf_dir).select(
         "user_id",
         "event_type",
@@ -4466,7 +4455,7 @@ def q97_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q98_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.history import snapshot_diff
 
-    _tune(spark)
+    tune_for_oracle(spark)
     old = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -4516,7 +4505,7 @@ def q99_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_distinct_count,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("date").alias("d"), "o_custkey"
     )
@@ -4566,7 +4555,7 @@ def q99_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("profile", "quality", "single-pass"),
 )
 def q100_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     t = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
         _cents(F.col("o_totalprice")).alias("total_c"),
@@ -4608,7 +4597,7 @@ def q100_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q101_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.orderstats import weighted_median
 
-    _tune(spark)
+    tune_for_oracle(spark)
     s = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         _cents(F.col("l_extendedprice")).alias("v"),
@@ -4671,7 +4660,7 @@ def q101_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q102_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sketches import bloom_contract
 
-    _tune(spark)
+    tune_for_oracle(spark)
     customer = _t(spark, sf_dir, "customer")
     build = customer.filter(F.col("c_mktsegment") == "BUILDING").select(
         "c_custkey"
@@ -4716,7 +4705,7 @@ def q102_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q103_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.orderstats import skyline_2d
 
-    _tune(spark)
+    tune_for_oracle(spark)
     p = _t(spark, sf_dir, "part").select(
         "p_partkey",
         _cents(F.col("p_retailprice")).alias("price_c"),
@@ -4774,7 +4763,7 @@ def q103_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("session-window", "attribution", "argmax"),
 )
 def q104_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).select(
         "user_id",
         "event_id",
@@ -4842,7 +4831,7 @@ def q104_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q105_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation")
     customer = _t(spark, sf_dir, "customer")
@@ -4904,7 +4893,7 @@ def q105_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q106_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     monthly = (
@@ -4969,7 +4958,7 @@ def q106_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "anti-join", "agg"),
 )
 def q107_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     bal_c = _cents(F.col("c_acctbal"))
@@ -5048,7 +5037,7 @@ def q108_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir)
     joined = purchase_view_interval_join(stream, "30 minutes", how="leftOuter")
     return run_to_memory(joined, _sink_name("q108_outer"), mode="append")
@@ -5095,7 +5084,7 @@ def q109_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         triangle_count,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     lineitem = _t(spark, sf_dir, "lineitem")
     pairs = cooccurrence_pairs(lineitem, "l_orderkey", "l_partkey", min_support=2)
     edges = canonical_edges(pairs, "item_a", "item_b")
@@ -5137,7 +5126,7 @@ def q109_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("feature-prep", "zscore", "broadcast"),
 )
 def q110_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         "l_orderkey", "l_linenumber", "l_returnflag",
@@ -5201,7 +5190,7 @@ def q110_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("stats", "chi-square", "contingency"),
 )
 def q111_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     obs = orders.groupBy(
         F.col("o_orderpriority").alias("r"), F.col("o_orderstatus").alias("c")
@@ -5252,7 +5241,7 @@ def q111_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q112_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.unix_micros(F.col("ts")), F.col("event_id")
@@ -5297,7 +5286,7 @@ def q112_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("skew", "diagnostics", "agg"),
 )
 def q113_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     f = orders.groupBy(F.col("o_custkey").alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -5371,7 +5360,7 @@ def q113_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q114_groupwise_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import groupwise_ols
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         "l_returnflag",
@@ -5422,7 +5411,7 @@ def q114_groupwise_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q115_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import ewma_smooth
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).select(
         "event_id", "user_id", "ts", _cents(F.col("value")).alias("v")
     )
@@ -5491,7 +5480,7 @@ def q115_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q116_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import mad_outlier_stats
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         F.col("l_returnflag"),
@@ -5539,7 +5528,7 @@ def q116_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q17", "correlated-agg", "broadcast"),
 )
 def q117_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
     l = li.join(
@@ -5591,7 +5580,7 @@ def q117_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q18", "having", "broadcast"),
 )
 def q118_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     t = (
@@ -5635,7 +5624,7 @@ def q118_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q19", "disjunction", "predicate-derivation"),
 )
 def q119_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
     # Part-side implied filter (union of the disjuncts' part terms):
@@ -5705,7 +5694,7 @@ def q119_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q21", "exists", "anti-join"),
 )
 def q120_sole_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
@@ -5766,7 +5755,7 @@ def q121_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_states,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", _cents(F.col("o_totalprice")).alias("cents")
     )
@@ -5842,7 +5831,7 @@ def q122_pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from us_immigration_data_lake_spark.operators.graph import pagerank_quantized
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.unix_micros(F.col("ts")), F.col("event_id")
@@ -5910,7 +5899,7 @@ def q123_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from us_immigration_data_lake_spark.functions.text import tokens
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
@@ -5979,7 +5968,7 @@ def q123_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q124_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     s = orders.select(
         "o_orderkey", _cents(F.col("o_totalprice")).alias("cents")
@@ -6041,7 +6030,7 @@ def q124_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q125_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     s = li.select(
         F.col("l_returnflag").alias("g"),
@@ -6107,7 +6096,7 @@ def q126_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_probe,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 3)
     dim = supplier.select("s_suppkey", "s_name")
@@ -6168,7 +6157,7 @@ def q127_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir).select(
         "user_id", _cents(F.col("value")).alias("cents")
     )
@@ -6209,7 +6198,7 @@ def q127_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sequence", "pattern-match", "regex"),
 )
 def q128_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     seq = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -6275,7 +6264,7 @@ def q128_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q129_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.audit import constraint_report
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     return constraint_report(
         li,
@@ -6338,7 +6327,7 @@ def q129_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q130_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sketches import kmv_distinct
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     sk = kmv_distinct(li, ["l_returnflag"], "l_partkey", k=64)
     exact = li.groupBy("l_returnflag").agg(
@@ -6372,7 +6361,7 @@ def q130_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "null-safe", "semantics"),
 )
 def q131_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     customer = _t(spark, sf_dir, "customer").select(
         F.nullif(F.col("c_nationkey"), F.lit(0)).alias("ck")
     )
@@ -6425,7 +6414,7 @@ def q131_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q132_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.col("t"), F.col("event_id"))
     s = ev.select(
@@ -6488,7 +6477,7 @@ def q132_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q133_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     days = ev.select(
         "user_id", F.to_date(F.col("ts")).alias("d")
@@ -6531,7 +6520,7 @@ def q133_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q11", "scalar-subquery", "share"),
 )
 def q134_revenue_share_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_partkey").agg(
         F.sum(_cents(F.col("l_extendedprice"))).cast("long").alias("rev")
@@ -6567,7 +6556,7 @@ def q134_revenue_share_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q15", "scalar-subquery", "argmax"),
 )
 def q135_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier")
     sr = li.groupBy("l_suppkey").agg(
@@ -6609,7 +6598,7 @@ def q135_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("array", "higher-order", "functions"),
 )
 def q136_higher_order_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     zero = F.lit(0.0)
@@ -6662,7 +6651,7 @@ def q136_higher_order_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reconciliation", "integrity", "join"),
 )
 def q137_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     ls = li.groupBy("l_orderkey").agg(
@@ -6715,7 +6704,7 @@ def q137_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mode", "argmax", "agg"),
 )
 def q138_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     c = (
@@ -6765,7 +6754,7 @@ def q138_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q139_time_since_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     s = ev.select(
         "event_id", "user_id", "event_type",
@@ -6818,7 +6807,7 @@ def q139_time_since_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q140_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     s = ev.select(
         "user_id", "event_id",
@@ -6899,7 +6888,7 @@ def q141_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_query,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     sketch = countmin_build(li, "l_partkey", depth=4, width=2048)
     probe = (
@@ -7012,7 +7001,7 @@ def q142_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_jaccard,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     sk_a = kmv_hashes(
         li.filter(F.col("l_returnflag") == "A"), ["l_linestatus"], "l_partkey", k=64
@@ -7085,7 +7074,7 @@ def q142_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q7", "multi-join", "broadcast"),
 )
 def q143_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     nation = _t(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2")
     )
@@ -7160,7 +7149,7 @@ def q143_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q8", "market-share", "multi-join", "broadcast"),
 )
 def q144_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     asia_cust = (
@@ -7232,7 +7221,7 @@ def q144_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q4", "exists", "semi-join", "residual-predicate"),
 )
 def q145_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate").cast("date") < F.lit("1996-04-01"))
@@ -7276,7 +7265,7 @@ def q145_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q13", "left-outer", "count-of-counts"),
 )
 def q146_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     cust = _t(spark, sf_dir, "customer").select("c_custkey")
     orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
@@ -7320,7 +7309,7 @@ def q147_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_query,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     threshold = 45
     li = _t(spark, sf_dir, "lineitem")
     sketch = countmin_build(li, "l_partkey", depth=4, width=65536)
@@ -7383,7 +7372,7 @@ def q147_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q148_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    _tune(spark)
+    tune_for_oracle(spark)
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eur_supp = (
@@ -7458,7 +7447,7 @@ def q148_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q6", "scan-agg", "pushdown"),
 )
 def q149_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -7510,7 +7499,7 @@ def q149_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q10", "top-k", "two-phase-agg"),
 )
 def q150_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").cast("date").between("1996-01-01", "1996-03-31")
     )
@@ -7570,7 +7559,7 @@ def q150_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q14", "conditional-agg", "broadcast"),
 )
 def q151_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date").between("1996-09-01", "1996-09-30")
     )
@@ -7617,7 +7606,7 @@ def q151_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q16", "count-distinct", "anti-join", "broadcast"),
 )
 def q152_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     part = _t(spark, sf_dir, "part").filter(
         (F.col("p_type") != "STANDARD")
         & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
@@ -7676,7 +7665,7 @@ def q152_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q20", "nested-agg", "conditional-agg"),
 )
 def q153_class_dominant_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     part = _t(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_type").isin("PROMO", "ECONOMY", "SMALL").alias("in_class"),
@@ -7736,7 +7725,7 @@ def q153_class_dominant_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q9", "profit", "like-pushdown", "broadcast"),
 )
 def q154_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
     supp = (
         _t(spark, sf_dir, "supplier")
@@ -7797,7 +7786,7 @@ def q154_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch-q12", "case-split", "date-arith"),
 )
 def q155_late_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date").between("1997-01-01", "1997-12-31")
     )
@@ -7912,7 +7901,7 @@ def q156_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     g = ["l_returnflag"]
     est_d = hll_estimate(hll_registers(li, g, "l_orderkey"), g)
@@ -8033,7 +8022,7 @@ def _q157_oracle_sql() -> str:
     tags=("similarity", "pq", "ivf-pq", "ann", "adc"),
 )
 def q157_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     coarse, books = _q157_models()
     queries = emb.filter(F.col("vec_id") % 100 == 7)
@@ -8100,7 +8089,7 @@ def q157_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q158_segment_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.remove_boilerplate(
         docs, "doc_id", "text", seg_words=10, min_docs=2
@@ -8161,7 +8150,7 @@ def q159_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_budget_fill,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     kept = token_budget_fill(
         docs.withColumn(
@@ -8236,7 +8225,7 @@ _Q160_BIAS = -480000
     bench=True,
 )
 def q160_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     feats = ts_ops.text_features(docs, "doc_id", "text").join(
         docs.select("doc_id", "lang"), "doc_id"
@@ -8317,7 +8306,7 @@ def q161_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir).select("event_type", "user_id")
     root = tempfile.mkdtemp(prefix="q161_hll_")
     state_dir = f"{root}/state"
@@ -8403,7 +8392,7 @@ def q162_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_event_stream(spark, sf_dir).select("user_id")
     root = tempfile.mkdtemp(prefix="q162_cm_")
     state_dir = f"{root}/state"
@@ -8502,7 +8491,7 @@ def q163_sketch_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     # ONE pass over data: the base-cell registers
     cells = hll_registers(docs, ["lang", "source"], "doc_id")
@@ -8598,7 +8587,7 @@ def q164_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         interpolate_fill,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id") % 25 == 3)
     obs = (
         ev.select(
@@ -8699,7 +8688,7 @@ def q165_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_quantile,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "cents", _cents(F.col("l_extendedprice"))
     )
@@ -8774,7 +8763,7 @@ def q165_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard", "prefix-filter", "ssjoin", "scale"),
 )
 def q166_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     tok = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     sh = docs.select(
@@ -8824,7 +8813,7 @@ def q166_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "pivot", "unpivot"),
 )
 def q167_sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     _t(spark, sf_dir, "orders").createOrReplaceTempView("q167_orders")
     return spark.sql(
         """
@@ -8871,7 +8860,7 @@ def q167_sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "set-ops", "bag-semantics"),
 )
 def q168_setops_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "A").select(
         F.col("l_suppkey").alias("k")
@@ -8974,7 +8963,7 @@ def q169_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     views = ev.filter(F.col("event_type") == "view")
     buys = ev.filter(F.col("event_type") == "purchase")
@@ -9061,7 +9050,7 @@ def q170_cm_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_inner_product,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     sk_a = countmin_build(li, "l_orderkey", depth=4, width=2048)
@@ -9140,7 +9129,7 @@ def q171_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest_state,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = (
         read_event_stream(spark, sf_dir)
         .filter(F.col("value").isNotNull())
@@ -9231,7 +9220,7 @@ def q172_weighted_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_quantile,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         _cents(F.col("l_extendedprice")).alias("cents"),
@@ -9335,7 +9324,7 @@ def q173_rolling_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
     daily = ev.select(F.col("ts").cast("date").alias("d"), "user_id")
     day_regs = hll_registers(daily, ["d"], "user_id")
@@ -9468,7 +9457,7 @@ def q174_histogram_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_rank,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("g"),
         "o_orderkey",
@@ -9522,7 +9511,7 @@ def q174_histogram_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "recursive-cte", "iteration"),
 )
 def q175_recursive_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     _t(spark, sf_dir, "customer").createOrReplaceTempView("q175_customer")
     return spark.sql(
         """
@@ -9584,7 +9573,7 @@ def q175_recursive_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "recursive-cte", "graph", "dag"),
 )
 def q176_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 120
     ).createOrReplaceTempView("q176_documents")
@@ -9707,7 +9696,7 @@ def q177_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_budget_fill,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -9790,7 +9779,7 @@ def q177_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar-functions", "strings", "sql-surface"),
 )
 def q178_string_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     supp = _t(spark, sf_dir, "supplier").filter(F.col("s_suppkey") % 7 == 0)
     return supp.select(
         "s_suppkey",
@@ -9832,7 +9821,7 @@ def q178_string_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar-functions", "calendar", "dates"),
 )
 def q179_calendar_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 211 == 0)
     d = F.col("o_orderdate").cast("date")
     return orders.select(
@@ -9878,7 +9867,7 @@ def q179_calendar_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar-functions", "bitwise", "math"),
 )
 def q180_bitmath_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 977 == 0)
     return li.select(
         "l_orderkey",
@@ -9963,7 +9952,7 @@ def _q181_oracle_sql() -> str:
     bench=True,
 )
 def q181_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     # max_bucket_size=None EXPLICITLY: this row pins the uncapped
     # exact-within-bucket SemDeDup oracle semantics (and keeps the
@@ -10033,7 +10022,7 @@ def _q182_oracle_sql() -> str:
     bench=True,
 )
 def q182_lsh_bucket_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     frames = dedup_ops.near_dup_frames(
         docs, "doc_id", "text", shingle_n=2, num_hashes=_Q55_HASHES,
@@ -10106,7 +10095,7 @@ def q183_xent_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         histogram_rank,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     xent = ts_ops.unigram_cross_entropy(
         docs, "doc_id", "text", as_micronats=True
@@ -10185,7 +10174,7 @@ def q183_xent_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "clustering", "survivor-policy"),
 )
 def q184_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     pairs = dedup_ops.postings_jaccard_pairs(sh, "doc_id", min_jaccard=0.08)
@@ -10220,7 +10209,7 @@ def q184_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def q185_lsh_production_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     # identical parameters to q20 — the ONLY difference is
     # portable=False (xxhash64 shingle/band hashing, the default users
@@ -10396,7 +10385,7 @@ def q186_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_training_corpus,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     _, st = build_training_corpus(
         docs,
@@ -10522,7 +10511,7 @@ def _q187_oracle_sql() -> str:
     bench=True,
 )
 def q187_semantic_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     return sim_ops.semantic_dedup(
         emb, "vec_id", "embedding", threshold=_Q181_TAU,
@@ -10673,7 +10662,7 @@ def _q188_oracle_sql() -> str:
     # a measured slope next to its parents q182/q187.
 )
 def q188_joint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     joined = docs.join(
@@ -10792,7 +10781,7 @@ def _q189_oracle_sql() -> str:
     # merge is shuffle-bound on the shingle key; benched from day one.
 )
 def q189_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.remove_repeated_substrings(
         docs, "doc_id", "text", k=_Q189_K, portable=True
@@ -10866,7 +10855,7 @@ def _q190_oracle_sql() -> str:
     tags=("dedup", "minhash", "lsh", "cross-corpus", "portable"),
 )
 def q190_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
@@ -10968,7 +10957,7 @@ def _q191_oracle_sql() -> str:
 def q191_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.sampling import dsir_select
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     target = docs.filter(F.col("lang") == "en")
     return dsir_select(
@@ -11037,7 +11026,7 @@ def _q192_oracle_sql() -> str:
     tags=("similarity", "dedup", "semdedup", "cross-corpus", "skew-guard"),
 )
 def q192_cross_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     new_df = emb.filter(F.col("vec_id") % 2 == 1)
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)
@@ -11097,7 +11086,7 @@ def _q193_oracle_sql() -> str:
 def q193_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.retrieval import rrf_fuse
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     lex = ts_ops.bm25_multiterm_topk(
@@ -11191,7 +11180,7 @@ def _q194_oracle_sql() -> str:
     ),
 )
 def q194_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.bpe_merges(docs, "text", n_merges=_Q194_MERGES)
 
@@ -11225,7 +11214,7 @@ def q195_stream_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from us_immigration_data_lake_spark.streaming.windows import run_to_memory
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_parquet_stream(
         spark, f"{sf_dir.rstrip('/')}/documents*.parquet"
     ).filter((F.col("doc_id") < 200) & (F.col("doc_id") % 2 == 1))
@@ -11313,7 +11302,7 @@ def _q196_oracle_sql() -> str:
     tags=("dedup", "sorted-neighborhood", "blocking", "portable"),
 )
 def q196_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.sorted_neighborhood_pairs(
         docs, "doc_id", "text", window=_Q196_WINDOW,
@@ -11359,7 +11348,7 @@ _Q197_D, _Q197_PREFIX = 2, 16
 )
 def q197_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    _tune(spark)
+    tune_for_oracle(spark)
     named = (
         docs.filter(F.col("doc_id") < 300)
         .select(
@@ -11441,7 +11430,7 @@ def _q198_oracle_sql() -> str:
 def q198_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import holt_linear
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
@@ -11531,7 +11520,7 @@ def _q199_oracle_sql() -> str:
 def q199_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import cusum_drift
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
@@ -11703,7 +11692,7 @@ def q200_incremental_corpus_update(spark: SparkSession, sf_dir: str) -> DataFram
         update_corpus_increment,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
@@ -11816,7 +11805,7 @@ def q201_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         holt_winters_additive,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
@@ -11919,7 +11908,7 @@ def _q202_oracle_sql() -> str:
 def q202_multi_pass_sorted_neighborhood(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").rlike("^[ -~]*$")
     )
@@ -12018,7 +12007,7 @@ def q203_train_quality_classifier(
 ) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"[ \t\n\x0B\f\r]+"),
@@ -12072,7 +12061,7 @@ def q204_stream_cross_semantic_dedup(
     )
     from us_immigration_data_lake_spark.streaming.windows import run_to_memory
 
-    _tune(spark)
+    tune_for_oracle(spark)
     stream = read_parquet_stream(
         spark, f"{sf_dir.rstrip('/')}/embeddings*.parquet"
     ).filter(F.col("vec_id") % 2 == 1)
@@ -12176,7 +12165,7 @@ def q205_train_langid_multinomial(
 ) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     labeled = docs.withColumn("__y", F.expr(_Q205_LANG_CASE).cast("long"))
     return tr_ops.train_multinomial_logreg_hashed(
@@ -12273,7 +12262,7 @@ def _q206_oracle_sql() -> str:
 def q206_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     labeled = docs.withColumn("__y", F.expr(_Q205_LANG_CASE).cast("long"))
     model = tr_ops.naive_bayes_model(
@@ -12350,7 +12339,7 @@ def q207_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_sequences_nextfit,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -12428,7 +12417,7 @@ def q208_ref_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ref_lm_bigram_xent,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     new_df = docs.filter(F.col("doc_id") % 2 == 1)
     ref_df = docs.filter(F.col("doc_id") % 2 == 0)
@@ -12512,7 +12501,7 @@ def _q209_oracle_sql() -> str:
     tags=("llm", "tokenizer", "bpe", "encode", "token-count", "portable"),
 )
 def q209_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     merges = [
         (r["left"], r["right"])
@@ -12616,7 +12605,7 @@ def q210_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from us_immigration_data_lake_spark.streaming.windows import run_to_memory
 
-    _tune(spark)
+    tune_for_oracle(spark)
     train = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull() & (F.col("doc_id") % 2 == 0))
@@ -12688,7 +12677,7 @@ def _q211_oracle_sql() -> str:
           "portable"),
 )
 def q211_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_ops.cross_group_overlap(
         docs, "doc_id", "text", "source", shingle_n=3, portable=True
@@ -12747,7 +12736,7 @@ def _q212_oracle_sql() -> str:
 def q212_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import ks_two_sample
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ks_two_sample(docs, "lang", "n_chars", "en", "zh")
 
@@ -12811,7 +12800,7 @@ def _q213_oracle_sql() -> str:
 def q213_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators.regress import psi_drift
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return psi_drift(
         docs, "lang", "n_chars", "en", "zh",
@@ -12928,7 +12917,7 @@ def q214_embedding_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_embedding_increment,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     final, _stats = update_embedding_increment(
         emb.filter(F.col("vec_id") % 2 == 1),
@@ -13051,7 +13040,7 @@ def _q215_oracle_sql() -> str:
 def q215_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q205_LANG_CASE).cast("long")
@@ -13127,7 +13116,7 @@ def _q216_oracle_sql() -> str:
 def q216_eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q205_LANG_CASE).cast("long")
@@ -13266,7 +13255,7 @@ def _q217_oracle_sql() -> str:
 def q217_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q217_LABEL_CASE).cast("long")
@@ -13377,7 +13366,7 @@ def q218_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_psi_by_snapshot,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ref = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     census = reference_census(
         ref, "n_chars", lo=_Q213_LO, width=_Q213_W, n_bins=_Q213_B
@@ -13512,7 +13501,7 @@ def q219_eval_classification_report(
 ) -> DataFrame:
     from us_immigration_data_lake_spark.operators import training as tr_ops
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     train = docs.filter(F.col("doc_id") % 2 == 0).withColumn(
         "__y", F.expr(_Q205_LANG_CASE).cast("long")
@@ -13586,7 +13575,7 @@ def q220_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_mixture_weights,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "lang",
@@ -13679,7 +13668,7 @@ def _q221_oracle_sql() -> str:
     tags=("similarity", "ann", "recall", "evaluation", "calibration"),
 )
 def q221_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _Q221_NQ)
     return sim_ops.ann_recall_at_k(
@@ -13751,7 +13740,7 @@ def q222_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         cluster_split_label,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     sh = dedup_ops.shingles(docs, "doc_id", "text", n=2)
     pairs = dedup_ops.postings_jaccard_pairs(sh, "doc_id", min_jaccard=0.08)
@@ -13816,7 +13805,7 @@ def _q223_oracle_sql() -> str:
     tags=("dedup", "minhash", "calibration", "evaluation", "portable"),
 )
 def q223_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     return dedup_ops.minhash_estimate_calibration(
         docs, "doc_id", "text", shingle_n=2, num_hashes=_Q20_HASHES,
@@ -13865,7 +13854,7 @@ def q224_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_shuffle_order,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return epoch_shuffle_order(
         docs, "doc_id", epoch=_Q224_EPOCH, n_shards=_Q224_SHARDS
@@ -13905,7 +13894,7 @@ def _q225_oracle_sql() -> str:
           "portable"),
 )
 def q225_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     merges = [
         (r["left"], r["right"])
@@ -13967,7 +13956,7 @@ def q226_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_group_cap,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     return per_group_cap(docs, "source", "doc_id", cap=_Q226_CAP)
 
@@ -14016,7 +14005,7 @@ def q227_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         curriculum_order,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     scored = ts_ops.quality_score(ts_ops.text_features(docs, "doc_id", "text"))
     return curriculum_order(
@@ -14080,7 +14069,7 @@ def q228_mixture_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_mixture_weights,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "lang",
@@ -14164,7 +14153,7 @@ def _q229_oracle_sql() -> str:
     tags=("textstats", "script", "unicode", "profile", "portable"),
 )
 def q229_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     return ts_ops.script_profile(docs, "doc_id", "text")
 
@@ -14233,7 +14222,7 @@ def _q230_oracle_sql() -> str:
           "clustering", "portable"),
 )
 def q230_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q230_N)
     return sim_ops.hard_negatives(
         emb, "vec_id", "embedding", k=_Q230_K, dim=EMBEDDING_DIM,
@@ -14301,7 +14290,7 @@ def q231_stream_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_mixture_by_snapshot,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     ref = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     per = ref.groupBy(F.col("lang").alias("group")).agg(
         F.count(F.lit(1)).cast("long").alias("rn")
@@ -14377,7 +14366,7 @@ def q232_incremental_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_capped_corpus,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     base = per_group_cap(
         docs.filter(F.col("doc_id") % 2 == 0), "source", "doc_id",
@@ -14476,7 +14465,7 @@ def _q233_oracle_sql() -> str:
     bench=True,  # q230's scale twin: the bench prices index vs all-pairs
 )
 def q233_hard_negatives_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     pairs = sim_ops.srp_bucket_near_dup_pairs(
         emb, "vec_id", "embedding", threshold=_Q233_THR,
@@ -14610,7 +14599,7 @@ def q234_training_order_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         training_order_pipeline,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     scored = ts_ops.quality_score(ts_ops.text_features(docs, "doc_id", "text"))
     base = scored.select("doc_id", "n_tokens", "quality_score").join(
@@ -14689,7 +14678,7 @@ def q234_training_order_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "quality", "repetition", "gopher", "portable"),
 )
 def q235_line_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     # deterministic multi-line synthesis (see oracle comment): the
     # fixture's texts are single-line, which would gate the operator
@@ -14851,7 +14840,7 @@ def _q236_oracle_sql() -> str:
           "calibration", "lsh", "portable"),
 )
 def q236_hard_negative_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q236_N)
     return sim_ops.hard_negative_recall(
         emb, "vec_id", "embedding", k=_Q236_K, dim=EMBEDDING_DIM,
@@ -14912,7 +14901,7 @@ def q237_training_order_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         training_order_epochs,
     )
 
-    _tune(spark)
+    tune_for_oracle(spark)
     docs = _t(spark, sf_dir, "documents")
     scored = ts_ops.quality_score(ts_ops.text_features(docs, "doc_id", "text"))
     base = scored.select("doc_id", "n_tokens", "quality_score").join(
@@ -14975,7 +14964,7 @@ def _q238_oracle_sql() -> str:
           "lsh", "deployment-rule", "portable"),
 )
 def q238_srp_config_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _Q236_N)
     return sim_ops.choose_srp_config(
         emb, "vec_id", "embedding", k=_Q236_K, dim=EMBEDDING_DIM,
@@ -15051,7 +15040,7 @@ def _q239_oracle_sql() -> str:
           "multi-table", "portable"),
 )
 def q239_srp_multi_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     return sim_ops.srp_multi_table_pairs(
         emb, "vec_id", "embedding", threshold=_Q181_TAU,
@@ -15125,7 +15114,7 @@ def _q240_oracle_sql() -> str:
           "banding", "multi-table", "portable"),
 )
 def q240_cross_multi_table_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tune(spark)
+    tune_for_oracle(spark)
     emb = _t(spark, sf_dir, "embeddings")
     new_df = emb.filter(F.col("vec_id") % 2 == 1)
     ref_df = emb.filter(F.col("vec_id") % 2 == 0)

@@ -110,6 +110,9 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
+        # a foreign session's default 200 shuffle partitions is pure
+        # overhead at bench scale (AQE coalesces batch shuffles, but
+        # streaming state shuffles use the raw value)
         spark.conf.set("spark.sql.shuffle.partitions", "32")
     except Exception:
         pass  # non-mutable on some deployments; AQE coalesces anyway
